@@ -1,11 +1,11 @@
 """Log kernel unit tests — no Spark session needed.
 
-Golden fixtures are the reference's delta-rs-written log
-(/root/reference/tests/fixtures/_delta_log/), an engine-neutral JSON corpus
-(reference test: tests/test_delta_log.py:17-39).
+Golden fixtures are a three-version log written by hand from the Delta
+protocol spec (tests/fixtures/README.md), an engine-neutral JSON corpus.
 """
 
 import json
+import os
 
 import pytest
 from pyspark.sql import types as T
@@ -32,7 +32,7 @@ from xdlake_spark.log.schema import (
 )
 from xdlake_spark.sources.storage import Location
 
-FIXTURES = "/root/reference/tests/fixtures/_delta_log"
+FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "_delta_log")
 
 
 def golden_log(version=None):
@@ -62,6 +62,15 @@ class TestGoldenFixtures:
     def test_missing_version_raises(self):
         with pytest.raises(ValueError):
             golden_log(version=99)
+
+    @pytest.mark.parametrize("make_dir", [False, True])
+    def test_pinned_version_of_absent_log_raises(self, tmp_path, make_dir):
+        log_dir = tmp_path / "_delta_log"
+        if make_dir:
+            log_dir.mkdir()
+        with pytest.raises(ValueError):
+            DeltaLog.load(Location.resolve(str(log_dir)), version=0)
+        assert not DeltaLog.load(Location.resolve(str(log_dir)))
 
     def test_roundtrip_bytes(self):
         log = golden_log()

@@ -25,7 +25,9 @@ except ModuleNotFoundError:
     fsspec_shim.install()
 
 sys.path.insert(0, "/root/reference")
-xdlake_ref = pytest.importorskip("xdlake")
+xdlake_ref = pytest.importorskip(
+    "xdlake", reason="the reference implementation (xbrianh/xdlake) is not "
+    "installed, so there is no second engine to compare against")
 
 
 def _ref_read_sorted(loc):

@@ -7,6 +7,21 @@ definition so the driver's DuckDB oracle can verify it exactly.
 
 These extend the reference's surface (xbrianh/xdlake has no text
 operators); mandated by the build brief's LLM-pipeline requirements.
+
+Higher-order functions (``transform``, ``aggregate``, ``zip_with``,
+``filter``) are evaluated by the interpreter, and Catalyst never
+eliminates common subexpressions inside their lambda bodies. A row-derived
+array referenced inside a lambda is therefore rebuilt once per element:
+re-tokenizing a document per token is O(tokens^2). So:
+
+- hoist row-derived arrays out of the lambda; per-position windows are
+  ``arrays_zip`` of shifted ``slice``s, and the lambda reads only its own
+  variable (:func:`dup_ngram_fraction`, :func:`shingles`,
+  :func:`kgram_hashes`);
+- build literal arrays with ``lit_longs``/``lit_doubles``
+  (``functions/vectors.py``): one parsed expression, one py4j call,
+  folded to a single ``Literal``, where ``F.array(*lits)`` costs one
+  py4j call per element.
 """
 
 from __future__ import annotations
@@ -149,22 +164,27 @@ def dup_line_fraction(col: Column) -> Column:
         .otherwise(F.lit(0.0))
 
 
+def _windows(arr: Column, k: int) -> Column:
+    """Every run of k consecutive elements of ``arr``, in order, as
+    structs with fields ``'0'`` .. ``'k-1'``: one ``arrays_zip`` of k
+    shifted slices. Callers gate on ``size(arr) >= k``; below it the
+    single window is null-padded."""
+    m = F.greatest(F.size(arr) - (k - 1), F.lit(1))
+    return F.arrays_zip(*[F.slice(arr, F.lit(i + 1), m) for i in range(k)])
+
+
 def dup_ngram_fraction(col: Column, n: int = 2) -> Column:
     """Fraction of word n-grams (in order, with repeats) that duplicate
     an earlier n-gram — the Gopher duplicate-n-gram signal. 0 when the
     text has fewer than n tokens.
 
     Built as ``arrays_zip`` of n shifted slices, not a per-position
-    transform lambda: HOF lambda bodies are interpreted, so the lambda
-    form costs O(tokens) interpreter round-trips per document while the
-    zip form is a handful of vectorized array ops (tokens contain no
+    transform lambda (see the module docstring). Tokens contain no
     whitespace, so zipped tuples and space-joined strings dedupe
-    identically — the DuckDB oracle keeps the join form)."""
+    identically — the DuckDB oracle keeps the join form."""
     toks = F.split(F.lower(F.trim(col)), r"\s+")
     m = F.size(toks) - (n - 1)
-    safe_m = F.greatest(m, F.lit(1))
-    grams = F.arrays_zip(
-        *[F.slice(toks, F.lit(i + 1), safe_m) for i in range(n)])
+    grams = _windows(toks, n)
     return F.when(
         m > 0,
         (m - F.size(F.array_distinct(grams))).cast("double") / m) \
@@ -214,43 +234,53 @@ def codepoints(col: Column) -> Column:
     return F.transform(F.split(col, ""), lambda ch: F.ascii(ch))
 
 
+def _roll(h: Column, c: Column) -> Column:
+    """One Horner step of the rolling hash."""
+    return F.pmod(h * F.lit(ROLL_BASE) + c, F.lit(ROLL_MOD))
+
+
 def rolling_hash(col: Column) -> Column:
     """Polynomial (Rabin-Karp) rolling hash of the whole normalized text:
     ``h = fold(h * 257 + codepoint) mod (2^31 - 1)``; empty -> 0."""
     return F.aggregate(
-        codepoints(normalize_text(col)),
-        F.lit(0).cast("long"),
-        lambda h, c: F.pmod(h * F.lit(ROLL_BASE) + c, F.lit(ROLL_MOD)))
+        codepoints(normalize_text(col)), F.lit(0).cast("long"), _roll)
 
 
 def kgram_hashes(col: Column, k: int = 8) -> Column:
     """Rolling hash of every k-char gram of the normalized text, in
-    position order — the winnowing substrate. One pass: position i's
-    hash is the fold over codepoints [i, i+k).
+    position order — the winnowing substrate. Position i's hash is the
+    fold over codepoints [i, i+k).
+
+    The k-grams are ``arrays_zip`` of k shifted slices of the code
+    points, each folded by an unrolled Horner step over its struct
+    fields (see the module docstring), so the text is decoded O(k) times
+    per document, not once per position.
 
     A text shorter than k yields a single whole-text hash.
     """
     cps = codepoints(normalize_text(col))
     n = F.size(cps)
 
-    def gram(i):
-        return F.aggregate(
-            F.slice(cps, i + 1, k), F.lit(0).cast("long"),
-            lambda h, c: F.pmod(h * F.lit(ROLL_BASE) + c, F.lit(ROLL_MOD)))
+    def fold(g):
+        h = F.lit(0).cast("long")
+        for i in range(k):
+            h = _roll(h, g.getField(str(i)))
+        return h
 
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.when(n >= k, F.transform(idx, gram)) \
-        .otherwise(F.array(F.aggregate(
-            cps, F.lit(0).cast("long"),
-            lambda h, c: F.pmod(h * F.lit(ROLL_BASE) + c, F.lit(ROLL_MOD)))))
+    return F.when(n >= k, F.transform(_windows(cps, k), fold)) \
+        .otherwise(F.array(F.aggregate(cps, F.lit(0).cast("long"), _roll)))
 
 
 def shingles(col: Column, k: int = 3) -> Column:
-    """Distinct k-gram word shingles (arrays of 'w1 w2 w3' strings)."""
+    """Distinct k-gram word shingles (arrays of 'w1 w2 w3' strings).
+
+    The grams are ``arrays_zip`` of k shifted slices of the token
+    array, so the ``transform`` lambda reads only its own struct and a
+    document is tokenized O(k) times, not once per token (see the module
+    docstring)."""
     toks = F.split(F.lower(F.trim(col)), r"\s+")
     n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    sh = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)))
+    sh = F.transform(_windows(toks, k), lambda g: F.concat_ws(
+        " ", *[g.getField(str(i)) for i in range(k)]))
     return F.when(n >= k, F.array_distinct(sh)) \
         .otherwise(F.array_distinct(F.array(F.concat_ws(" ", toks))))

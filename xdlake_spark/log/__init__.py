@@ -355,6 +355,9 @@ class DeltaLog:
         commits) instead of O(all commits) per open. Time travel to a
         version before the checkpoint falls back to the full JSON replay
         (entries are never deleted by checkpointing).
+
+        A pinned ``version`` the log does not hold raises ``ValueError``,
+        also when the log is empty or missing.
         """
         from .checkpoint import last_checkpoint_version, read_checkpoint
 
@@ -430,7 +433,7 @@ class DeltaLog:
                 log_location.join(name).read_bytes())
 
         known = set(entries) | set(lazy) | covered
-        if version is not None and known and version not in known:
+        if version is not None and version not in known:
             raise ValueError(f"Version {version} does not exist in log")
         log = cls(entries)
         log._lazy_json = lazy

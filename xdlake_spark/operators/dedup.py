@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 
 from . import arrow_gate, ensure_parallelism, plan_row_estimate
 from ..functions.text import fingerprint_md5, shingles
-from ..functions.vectors import cosine, hyperplane_signature
+from ..functions.vectors import cosine, hyperplane_signature, lit_longs
 
 
 def _bounded_bucket_pairs(entries: DataFrame, keys: list[str],
@@ -123,18 +123,25 @@ def _bounded_bipartite_pairs(a: DataFrame, b: DataFrame,
     bounded by ~``bucket_cap``^2 regardless of bucket size.
 
     ``a`` has one row per (a_id, bucket), ``b`` one per (b_id, bucket).
-    Each side is salted into ``ceil(n_side / cap)`` groups by id hash
-    and the full grid of (salt_a, salt_b) blocks is enumerated — an A
-    row replicates to every B salt and vice versa, so a pair meets in
-    exactly ONE block and a hot bucket (s_a x s_b members) spreads its
-    s_a*s_b pair emissions over block tasks of ~cap^2 each. Attaching
-    the opposite side's count also prunes buckets present on one side
-    only before any fan-out. Emits one row per (bucket, pair); callers
-    aggregate co-occurrence counts.
+    Both sides' bucket sizes come from ONE aggregation over a
+    side-tagged union — (key, 1, 0) rows from ``a`` and (key, 0, 1) rows
+    from ``b``, summed per key — and buckets present on one side only
+    are pruned there, before any fan-out; each side then joins the
+    counts once. Each side is salted into ``ceil(n_side / cap)`` groups
+    by id hash and the full grid of (salt_a, salt_b) blocks is
+    enumerated — an A row replicates to every B salt and vice versa, so
+    a pair meets in exactly ONE block and a hot bucket (s_a x s_b
+    members) spreads its s_a*s_b pair emissions over block tasks of
+    ~cap^2 each. Emits one row per (bucket, pair); callers aggregate
+    co-occurrence counts.
     """
-    ca = a.groupBy(*keys).agg(F.count(F.lit(1)).alias("__na"))
-    cb = b.groupBy(*keys).agg(F.count(F.lit(1)).alias("__nb"))
-    ea = (a.join(ca, keys).join(cb, keys)
+    one, zero = F.lit(1), F.lit(0)
+    cnt = (a.select(*keys, one.alias("__na"), zero.alias("__nb"))
+           .union(b.select(*keys, zero.alias("__na"), one.alias("__nb")))
+           .groupBy(*keys)
+           .agg(F.sum("__na").alias("__na"), F.sum("__nb").alias("__nb"))
+           .filter((F.col("__na") > 0) & (F.col("__nb") > 0)))
+    ea = (a.join(cnt, keys)
           .withColumn("__sa", F.pmod(F.xxhash64("a_id"),
                                      F.ceil(F.col("__na")
                                             / F.lit(bucket_cap)))
@@ -143,7 +150,7 @@ def _bounded_bipartite_pairs(a: DataFrame, b: DataFrame,
               F.lit(0), (F.ceil(F.col("__nb") / F.lit(bucket_cap))
                          - 1).cast("int"))))
           .drop("__na", "__nb"))
-    eb = (b.join(cb, keys).join(ca, keys)
+    eb = (b.join(cnt, keys)
           .withColumn("__sb", F.pmod(F.xxhash64("b_id"),
                                      F.ceil(F.col("__nb")
                                             / F.lit(bucket_cap)))
@@ -936,7 +943,9 @@ def minhash_signature_df(df: DataFrame, text_col: str = "text",
     - pure JVM: a SINGLE ``aggregate`` + ``zip_with`` pass. (The naive
       form — one ``array_min(transform(...))`` per hash — embeds the
       pipeline ``num_hashes`` times; Catalyst does not CSE inside HOFs:
-      measured ~30x slower.) Still interpreted per shingle*hash.
+      measured ~30x slower — the rule in ``functions/text.py``'s module
+      docstring.) Still interpreted per shingle*hash. The coefficient
+      arrays are ``lit_longs`` literals: one py4j call each.
     - arrow (default past a few thousand docs): the folded 31-bit hash
       array ships to a pandas UDF; the S x num_hashes affine grid and
       column-min run as three numpy ops per document (products stay
@@ -989,8 +998,8 @@ def minhash_signature_df(df: DataFrame, text_col: str = "text",
         return hashed.select("id", "__shingles",
                              _sig(F.col("__h")).alias("signature"))
 
-    a_arr = F.array(*[F.lit(a).cast("long") for a, _ in coeffs])
-    b_arr = F.array(*[F.lit(b).cast("long") for _, b in coeffs])
+    a_arr = lit_longs([a for a, _ in coeffs])
+    b_arr = lit_longs([b for _, b in coeffs])
     per_shingle = F.transform(
         "__h", lambda h: F.zip_with(a_arr, b_arr,
                                     lambda a, b: F.pmod(h * a + b, m)))
@@ -1027,17 +1036,15 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                                 use_arrow=use_arrow).localCheckpoint(eager=True)
     sh = sigs.select("id", "__shingles")
 
+    # one parsed expression, one py4j call: the per-band struct tree
+    # built column by column cost ~100 py4j calls per operator call
     band_entries = sigs.select(
         "id",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.xxhash64(F.concat_ws(
-                         ",", *[F.element_at("signature", b * rows_per_band + r + 1)
-                                .cast("string")
-                                for r in range(rows_per_band)]))
-                     .alias("bucket"))
-            for b in range(bands)
-        ])).alias("bb"),
+        F.expr(f"""explode(transform(sequence(0, {bands - 1}), b ->
+            named_struct('band', b, 'bucket', xxhash64(concat_ws(',',
+                transform(slice(signature, b * {rows_per_band} + 1,
+                                {rows_per_band}),
+                          x -> cast(x as string)))))))""").alias("bb"),
     ).select("id", "bb.band", "bb.bucket")
 
     cand = _bounded_bucket_pairs(band_entries, ["band", "bucket"],
@@ -1256,7 +1263,14 @@ def cross_corpus_dedup(new: DataFrame, corpus: DataFrame,
     """Keep only the NEW-batch rows with no near-duplicate in the
     existing corpus (anti-join over :func:`cross_corpus_jaccard_pairs`
     — one extra shuffle on the id). The batch-admission filter of an
-    incremental ingestion pipeline."""
+    incremental ingestion pipeline.
+
+    ``new`` is read twice (shingled for the join, then anti-joined), so
+    it is checkpointed once up front: when it is itself a dedup result
+    (``minhash_dedup`` of the batch), its pair plan runs once, not
+    twice. The checkpoint is lazy: its shuffle stages run here, and the
+    final stage is kept by the first of the two reads."""
+    new = new.localCheckpoint(eager=False)
     dup_ids = (cross_corpus_jaccard_pairs(
                    new, corpus, text_col, id_col, k_shingle, threshold,
                    max_doc_freq, bucket_cap)
@@ -1330,9 +1344,8 @@ def simhash_df(df: DataFrame, text_col: str = "text",
     # literal bit masks 1<<0 .. 1<<63 (top one as the int64 sign value);
     # a mask array sidesteps shift functions, whose shift amount must be
     # a Python int, not a per-element column
-    masks = F.array(*[
-        F.lit((1 << i) if i < 63 else -(1 << 63)).cast("long")
-        for i in range(64)])
+    masks = lit_longs([(1 << i) if i < 63 else -(1 << 63)
+                       for i in range(64)])
 
     def vote(acc, h):
         return F.struct(
