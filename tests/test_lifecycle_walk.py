@@ -1,5 +1,6 @@
 """Model-based lifecycle fuzzing: seeded random walks drive a
-DeltaTable through interleaved append / overwrite / delete (CoW and
+DeltaTable through interleaved append (``DeltaTable.write`` and the
+``xdlake`` format sink) / overwrite / delete (CoW and
 merge-on-read) / update / MERGE / OPTIMIZE / RESTORE steps while a
 pure-Python model tracks the expected row set at every version.
 
@@ -24,6 +25,7 @@ import pytest
 from pyspark.sql import functions as F  # noqa: F401
 
 from xdlake_spark import DeltaTable
+from xdlake_spark.sources.datasource import register
 
 
 def _df(spark, rows):
@@ -38,7 +40,9 @@ def _scan(t):
 
 class Walk:
     def __init__(self, spark, loc, seed):
+        register(spark)
         self.spark = spark
+        self.loc = loc
         self.rng = random.Random(seed)
         self.next_id = 0
         self.state: dict[int, int] = {}
@@ -73,6 +77,15 @@ class Walk:
         self.t = self.t.write(_df(self.spark, rows), mode="append")
         self.state.update(rows)
         self._record(f"append({len(rows)})")
+
+    def op_format_append(self):
+        # the xdlake format sink commits through the same pipeline
+        rows = self._fresh_rows(self.rng.randint(1, 20))
+        _df(self.spark, rows).write.format("xdlake").mode(
+            "append").save(self.loc)
+        self.t = DeltaTable(self.spark, self.loc)
+        self.state.update(rows)
+        self._record(f"format_append({len(rows)})")
 
     def op_overwrite(self):
         rows = self._fresh_rows(self.rng.randint(3, 15))
@@ -121,10 +134,10 @@ class Walk:
         self._record(f"restore({v})")
 
     def step(self):
-        ops = [self.op_append, self.op_overwrite, self.op_delete,
-               self.op_update, self.op_merge, self.op_optimize,
-               self.op_restore]
-        weights = [4, 2, 3, 3, 3, 1, 1]
+        ops = [self.op_append, self.op_format_append, self.op_overwrite,
+               self.op_delete, self.op_update, self.op_merge,
+               self.op_optimize, self.op_restore]
+        weights = [4, 2, 2, 3, 3, 3, 1, 1]
         self.rng.choices(ops, weights)[0]()
 
     def check(self):

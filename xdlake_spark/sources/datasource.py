@@ -39,6 +39,10 @@ from pyspark.sql.datasource import (DataSource, DataSourceArrowWriter,
                                     WriterCommitMessage)
 from pyspark.sql.types import StructType
 
+from ..log import Add, DeltaLog, WriteMode, timestamp_ms
+from ..table import DeltaTable
+from .storage import Location
+
 
 class _FilePartition(InputPartition):
     def __init__(self, url: str, partition_values: dict,
@@ -160,8 +164,6 @@ def _iter_units(location_url: str, skip_change_commits: bool,
     or DV re-add carried. Without it such commits re-emit their
     surviving rows (matching Delta's ignoreChanges).
     """
-    from ..log import DeltaLog
-    from .storage import Location
 
     loc = Location.resolve(location_url)
     log = DeltaLog.load(loc.join("_delta_log"), use_checkpoint=False)
@@ -215,8 +217,6 @@ def _plan_live_snapshot(location_url: str, version: int
     """A fresh stream's initial snapshot: the LIVE file set at
     ``version`` (path-sorted) — every add replayed against its removes,
     so historical rewrites emit once and deleted files not at all."""
-    from ..log import DeltaLog
-    from .storage import Location
 
     if version < 0:
         return []
@@ -242,8 +242,6 @@ def _iter_cdf_units(location_url: str, lo_v: int, hi_v: int):
     lets a (version, index) offset split a version across capped
     micro-batches. Yields ``(version, [_FilePartition, ...])``;
     manifest-scale, no data touched."""
-    from ..log import DeltaLog
-    from .storage import Location
 
     loc = Location.resolve(location_url)
     log = DeltaLog.load(loc.join("_delta_log"), use_checkpoint=False)
@@ -371,8 +369,6 @@ class _XdlakeStreamReader(DataSourceStreamReader):
         self._last: "dict | None" = None
 
     def _current_version(self) -> int:
-        from ..log import DeltaLog
-        from .storage import Location
         log = DeltaLog.load(
             Location.resolve(self.path).join("_delta_log"))
         return log.version if log else -1
@@ -609,9 +605,7 @@ class _XdlakeBatchReader(DataSourceReader):
         return filters  # Spark re-applies everything: pruning only
 
     def partitions(self):
-        from ..log import DeltaLog
         from ..plans.skipping import prune_with_nodes
-        from .storage import Location
         log = DeltaLog.load(
             Location.resolve(self.path).join("_delta_log"),
             version=self.version)
@@ -692,8 +686,6 @@ class XdlakeDataSource(DataSource):
             if d.tzinfo is None:
                 d = d.replace(tzinfo=_dt.timezone.utc)
             ms = int(d.timestamp() * 1000)
-        from ..log import DeltaLog
-        from .storage import Location
         log = DeltaLog.load(
             Location.resolve(self._path()).join("_delta_log"))
         best = None
@@ -742,8 +734,6 @@ class XdlakeDataSource(DataSource):
                 if d.tzinfo is None:
                     d = d.replace(tzinfo=_dt.timezone.utc)
                 ms = int(d.timestamp() * 1000)
-            from ..log import DeltaLog
-            from .storage import Location
             log = DeltaLog.load(
                 Location.resolve(self._path()).join("_delta_log"))
             for h in log.history(reverse=False):
@@ -779,8 +769,6 @@ class XdlakeDataSource(DataSource):
         self._starting_version()
         from pyspark.sql.types import LongType, StringType, StructField
 
-        from ..log import DeltaLog
-        from .storage import Location
         log = DeltaLog.load(
             Location.resolve(self._path()).join("_delta_log"),
             version=self._time_travel_version())
@@ -827,27 +815,30 @@ class XdlakeDataSource(DataSource):
                                                         "false")
                                    ).lower() == "true")
 
-    def _sink_pcols(self, schema: StructType) -> list:
-        """Shared sink validation (batch + streaming): resolve the
-        table's partition columns (or the ``partitionBy`` option on a
-        creating write) and check the incoming schema matches."""
-        from ..log import DeltaLog
-        from .storage import Location
-        log = DeltaLog.load(
-            Location.resolve(self._path()).join("_delta_log"))
-        if log:
+    def _sink_pcols(self, t, schema: StructType,
+                    overwrite: bool) -> list:
+        """Shared sink validation (batch + streaming) against the
+        log-only planning handle ``t``: refuse what the sink tasks
+        cannot enforce and an overwrite of an append-only table,
+        resolve the table's partition columns (or the ``partitionBy``
+        option on a creating write) and check the incoming schema
+        matches."""
+        if t.log:
+            _refuse_unenforceable(t)
+            if overwrite:
+                t._require_mutable("OVERWRITE")
             if self.options.get("partitionBy"):
                 raise ValueError(
                     "partitionBy only applies when the sink CREATES "
                     "the table; this table already exists with "
-                    f"partition columns {log.partition_columns()}")
-            pcols = log.partition_columns()
-            want = {f.name: f.dataType for f in log.schema().fields}
+                    f"partition columns {t.partition_columns}")
+            pcols = t.partition_columns
+            want = {f.name: f.dataType for f in t.schema.fields}
             got = {f.name: f.dataType for f in schema.fields}
             if want != got:
                 raise ValueError(
                     "write schema does not match the table schema: "
-                    f"table={log.schema().simpleString()} "
+                    f"table={t.schema.simpleString()} "
                     f"df={schema.simpleString()}")
         else:
             pb = self.options.get("partitionBy")
@@ -863,13 +854,17 @@ class XdlakeDataSource(DataSource):
     def writer(self, schema: StructType,
                overwrite: bool) -> "DataSourceArrowWriter":
         """Batch SINK: df.write.format("xdlake").mode("append" |
-        "overwrite").save(path) — one ACID commit per job; a missing
-        table is created from the df schema + ``partitionBy`` option.
-        ``partitionOverwriteMode=dynamic`` scopes an overwrite to the
-        partitions the data lands in (manifest-only removes, like
-        Spark's own option). For PREDICATE-scoped overwrites use
-        DeltaTable.write(replace_where=...) — the conformance scan
-        needs the session, which the sink worker does not have."""
+        "overwrite").save(path) — one ACID commit per job through the
+        ``DeltaTable`` commit pipeline (see ``_XdlakeBatchWriter``); a
+        missing table is created from the df schema + ``partitionBy``
+        option. ``partitionOverwriteMode=dynamic`` scopes an overwrite
+        to the partitions the data lands in (manifest-only removes,
+        like Spark's own option). Refused, pointing at
+        ``DeltaTable.write``: ``replaceWhere`` (its conformance scan
+        needs the session), tables with CHECK constraints, column
+        invariants, generated or identity columns or column mapping
+        ``name``/``id``, and an overwrite of a ``delta.appendOnly``
+        table."""
         pom = str(self.options.get("partitionOverwriteMode",
                                    "static")).lower()
         if pom not in ("static", "dynamic"):
@@ -889,74 +884,59 @@ class XdlakeDataSource(DataSource):
             raise ValueError(
                 "txnAppId and txnVersion must be set together")
         txn = (str(app_id), int(ver)) if app_id is not None else None
-        skip = False
-        if txn is not None:
-            # planning-time replay check (driver-side, like
-            # delta-spark): an already-applied txn version skips the
-            # file writes entirely — executors emit nothing, commit
-            # no-ops, no orphans
-            from ..log import DeltaLog
-            from .storage import Location
-            log = DeltaLog.load(
-                Location.resolve(self._path()).join("_delta_log"))
-            if log:
-                seen = log.latest_txn_version(txn[0])
-                skip = seen is not None and seen >= txn[1]
-        pcols = self._sink_pcols(schema)
+        t = DeltaTable(None, self._path())
+        pcols = self._sink_pcols(t, schema, overwrite)
+        # planning-time replay check (driver-side, like delta-spark):
+        # an already-applied txn version skips the file writes
+        # entirely — executors emit nothing, commit no-ops, no orphans
         return _XdlakeBatchWriter(self._path(), schema.json(),
                                   partition_cols=pcols,
                                   overwrite=overwrite,
                                   dynamic=(pom == "dynamic"
                                            and overwrite),
-                                  txn=txn, skip=skip,
-                                  stats_cols=_table_stats_cols(
-                                      self._path()))
+                                  txn=txn, skip=t._txn_applied(txn),
+                                  stats_cols=t._stats_columns())
 
     def streamWriter(self, schema: StructType,
                      overwrite: bool) -> "DataSourceStreamArrowWriter":
-        """Streaming SINK: one ACID append commit per micro-batch,
-        partitioned or not (each task splits its slice by the table's
-        partition columns and the adds carry partitionValues);
-        replayed batch ids are no-ops. A missing table is CREATED by
-        the first batch (delta-spark writeStream parity) using the
-        stream schema and the optional ``partitionBy`` option
-        (comma-separated); an existing table's schema must match the
-        stream's (name -> type, order-insensitive) — a drifted stream
-        is refused, never silently written."""
-        pcols = self._sink_pcols(schema)
+        """Streaming SINK: one ACID append commit per micro-batch
+        through the ``DeltaTable`` commit pipeline, partitioned or not
+        (each task splits its slice by the table's partition columns
+        and the adds carry partitionValues); replayed batch ids are
+        no-ops. A missing table is CREATED by the first batch
+        (delta-spark writeStream parity) using the stream schema and
+        the optional ``partitionBy`` option (comma-separated); an
+        existing table's schema must match the stream's (name -> type,
+        order-insensitive) — a drifted stream is refused, never
+        silently written. Tables with CHECK constraints, column
+        invariants, generated or identity columns or column mapping
+        ``name``/``id`` are refused, pointing at ``DeltaTable.write``."""
+        t = DeltaTable(None, self._path())
+        pcols = self._sink_pcols(t, schema, overwrite=False)
         return _XdlakeStreamWriter(self._path(), schema.json(),
                                    partition_cols=pcols,
-                                   stats_cols=_table_stats_cols(
-                                       self._path()))
+                                   stats_cols=t._stats_columns())
 
 
-def _table_stats_cols(path: str) -> "list[str] | None":
-    """Driver-side resolution of the table's data-skipping stats
-    restriction (``delta.dataSkippingStatsColumns`` /
-    ``delta.dataSkippingNumIndexedCols``) so the format sink writes
-    the SAME restricted footer stats as the native table API
-    (DeltaTable._stats_columns, table.py) — a wide table configured
-    to limit stats must not get full-width stats JSON just because it
-    was written through ``df.write.format("xdlake")``. None = no
-    table yet, or no restriction configured (keep all columns)."""
-    from ..log import DeltaLog
-    from .storage import Location
-
-    log = DeltaLog.load(Location.resolve(path).join("_delta_log"))
-    if not log:
-        return None
-    cfg = log.metadata().configuration or {}
-    explicit = cfg.get("delta.dataSkippingStatsColumns")
-    if explicit:
-        return [c.strip().strip("`") for c in explicit.split(",")
-                if c.strip()]
-    n = cfg.get("delta.dataSkippingNumIndexedCols")
-    if n is None:
-        return None
-    n = int(n)
-    if n < 0:
-        return None
-    return log.schema().fieldNames()[:n]
+def _refuse_unenforceable(t) -> None:
+    """The sink tasks are Python workers without a Spark session: they
+    cannot evaluate data-level checks (CHECK constraints, column
+    invariants, generated and identity columns), and they write
+    logical column names, which a column-mapped table would read back
+    as NULL. Refuse such tables loudly instead of committing rows
+    nothing checked."""
+    found = [label for label, present in (
+        ("CHECK constraints", t.constraints),
+        ("column invariants", t._invariants()),
+        ("generated columns", t._generated_columns()),
+        ("identity columns", t._identity_columns()),
+        (f"column mapping mode {t.column_mapping_mode!r}",
+         t.column_mapping_mode in ("name", "id"))) if present]
+    if found:
+        raise NotImplementedError(
+            "the xdlake format sink cannot write this table: it has "
+            f"{', '.join(found)}, which the sink's Python tasks cannot "
+            "enforce or map — use DeltaTable.write(), which does")
 
 
 def register(spark) -> None:
@@ -994,9 +974,11 @@ class _XdlakeStreamWriter(DataSourceStreamArrowWriter):
     under the table root — one file per distinct table-partition combo,
     Hive-encoded directories matching the batch writer's layout — and
     the driver composes add actions (with partitionValues) into ONE log
-    commit per micro-batch, with batch-id idempotence so a replayed
-    batch after a failure is a no-op (exactly-once table contents on
-    at-least-once task execution).
+    commit per micro-batch through ``DeltaTable._commit_staged`` (see
+    ``_XdlakeBatchWriter``), with batch-id idempotence so a replayed
+    batch after a failure is a no-op that deletes the files its tasks
+    wrote (exactly-once table contents on at-least-once task
+    execution).
 
     Arrow-native (r13, guide §4.1): tasks receive ``pa.RecordBatch``es
     straight from the JVM instead of pickled Rows — the old row path
@@ -1063,7 +1045,6 @@ class _XdlakeStreamWriter(DataSourceStreamArrowWriter):
 
         from ..log.schema import spark_type_to_arrow
         from ..log.statistics import Statistics
-        from .storage import Location
 
         spark_schema = _St.fromJson(json.loads(self.schema_json))
         pcols = self.partition_cols
@@ -1133,103 +1114,38 @@ class _XdlakeStreamWriter(DataSourceStreamArrowWriter):
         return _WrittenFiles(out)
 
     def commit(self, messages, batchId: int) -> None:
-        import json
-
-        from pyspark.sql import types as _T
-        from ..log import (DeltaLog, Add, Protocol, SetTransaction,
-                           append_table_entry, commit_entry,
-                           create_table_entry, timestamp_ms)
-        from .storage import Location
-
-        loc = Location.resolve(self.path)
-        log_loc = loc.join("_delta_log")
-        log = DeltaLog.load(log_loc)
         # idempotence via the Delta protocol's txn watermark: a Spark
         # retry re-runs the same batchId -> no-op regardless of any
         # commits other writers landed in between (stronger than
         # checking only the newest commitInfo)
-        app_id = f"xdlake-streaming:{loc.url}"
-        seen = log.latest_txn_version(app_id)
-        if seen is not None and seen >= batchId:
-            return
-        files = [f for m in messages if m is not None
-                 for f in m.files]
-        adds = [Add(path=f.rel_path, size=f.size,
+        app_id = f"xdlake-streaming:{Location.resolve(self.path).url}"
+        adds = self._adds(messages)
+        if adds:
+            self._commit(DeltaTable(None, self.path), adds,
+                         mode=WriteMode.append, txn=(app_id, batchId),
+                         custom_metadata={"streamingBatchId": batchId})
+
+    def _adds(self, messages) -> list:
+        return [Add(path=f.rel_path, size=f.size,
                     modificationTime=timestamp_ms(),
                     partitionValues=f.partition_values or {},
                     stats=f.stats_json)
-                for f in files if f.num_rows > 0]
-        if not adds:
-            return
-        txn = SetTransaction(appId=app_id, version=batchId,
-                             lastUpdated=timestamp_ms())
-        if not log:
-            # first commit CREATES the table (delta-spark writeStream
-            # parity): metaData from the stream schema + partitionBy
-            schema = _T.StructType.fromJson(json.loads(
-                self.schema_json))
-            entry = create_table_entry(schema, self.partition_cols,
-                                       loc.url, adds)
-            entry.actions.insert(0, txn)
-            # spec: a schema containing timestamp_ntz must declare the
-            # feature on the creating protocol (variant cannot reach
-            # this sink — the arrow conversion refuses it upstream)
-            if any(isinstance(f.dataType, _T.TimestampNTZType)
-                   for f in schema.fields):
-                up = Protocol(minReaderVersion=3, minWriterVersion=7)
-                up.extra = {
-                    "readerFeatures": ["timestampNtz"],
-                    "writerFeatures": sorted(
-                        {"appendOnly", "invariants", "timestampNtz"})}
-                entry.actions = [a for a in entry.actions
-                                 if not isinstance(a, Protocol)]
-                entry.actions.insert(0, up)
-        else:
-            entry = append_table_entry(
-                adds, self.partition_cols,
-                custom_metadata={"streamingBatchId": batchId},
-                txn=txn)
+                for m in messages if m is not None for f in m.files
+                if f.num_rows > 0]
 
-        def _stamp_ict_if_enabled() -> None:
-            # an ICT-enabled table's clock must stay monotonic through
-            # streaming commits too; re-stamped per retry so a winner's
-            # newer ICT is still strictly exceeded
-            if not log:
-                return           # creating commit: no prior clock
-            cfg = log.metadata().configuration or {}
-            if str(cfg.get("delta.enableInCommitTimestamps", "false")
-                   ).lower() != "true":
-                return
-            prev = log.last_ict()
-            ci = entry.commit_info
-            ict = max(timestamp_ms(),
-                      (prev + 1) if prev is not None else 0)
-            ci.extra["inCommitTimestamp"] = ict
-            ci.timestamp = ict
-            entry.actions.remove(ci)
-            entry.actions.insert(0, ci)
+    def _commit(self, t, adds: list, **kw) -> None:
+        """Both sinks' commit. An existing table keeps its declared
+        schema (the sink's matches it by name and type); a missing one
+        is created from the sink's."""
+        import json
 
-        _stamp_ict_if_enabled()
-        for attempt in range(5):
-            try:
-                commit_entry(log_loc, log.version_to_write, entry)
-                return
-            except FileExistsError:
-                if attempt == 4:
-                    raise
-                was_create = not log
-                log = DeltaLog.load(log_loc)
-                if was_create and log:
-                    # a concurrent writer created v0 first: this
-                    # commit becomes a plain append of the same adds
-                    entry = append_table_entry(
-                        adds, self.partition_cols,
-                        custom_metadata={"streamingBatchId": batchId},
-                        txn=txn)
-                _stamp_ict_if_enabled()
+        _refuse_unenforceable(t)
+        schema = t.schema if t.log else StructType.fromJson(
+            json.loads(self.schema_json))
+        t._commit_staged(adds, schema, self.partition_cols,
+                         max_commit_retries=4, **kw)
 
-    def abort(self, messages, batchId: int) -> None:
-        from .storage import Location
+    def abort(self, messages, batchId: "int | None" = None) -> None:
         for m in messages:
             for wf in (m.files if m is not None else []):
                 if wf.rel_path:
@@ -1249,11 +1165,19 @@ class _XdlakeBatchWriter(_XdlakeStreamWriter, DataSourceArrowWriter):
     stats, partitionValues on every add), and the driver lands ONE
     ACID commit — CREATE TABLE when the path is empty (schema +
     ``partitionBy`` option), append otherwise, or a full overwrite for
-    ``mode("overwrite")``. Appends retry past optimistic-concurrency
-    collisions (they commute); an overwrite that loses the race raises
-    (its removes were planned against a stale snapshot). Completes the
-    format's fourth quadrant: batch read / stream read / stream write
-    all existed."""
+    ``mode("overwrite")``.
+
+    Both sinks commit through ``DeltaTable._commit_staged`` on a
+    log-only ``DeltaTable(None, path)``, the pipeline
+    ``DeltaTable.write`` uses (protocol checks, row-tracking and ICT
+    stamps, type features, crc, checkpoints, UniForm); appends retry
+    up to 4 times, overwrites never. Auto-compaction does not run: it
+    rewrites data, and the worker has no session. Refused at planning
+    time (``XdlakeDataSource._sink_pcols``), since the tasks cannot
+    enforce or map them: tables with CHECK constraints, column
+    invariants, generated or identity columns or column mapping
+    ``name``/``id``, and an overwrite of a ``delta.appendOnly``
+    table — use ``DeltaTable.write`` for those."""
 
     def __init__(self, path: str, schema_json: str,
                  partition_cols: "list[str] | None",
@@ -1279,121 +1203,12 @@ class _XdlakeBatchWriter(_XdlakeStreamWriter, DataSourceArrowWriter):
         return super().write(iterator)
 
     def commit(self, messages) -> None:
-        import json
-
-        from pyspark.sql import types as _T
-        from ..log import (Add, DeltaLog, Protocol,
-                           append_table_entry, commit_entry,
-                           create_table_entry, overwrite_table_entry,
-                           timestamp_ms)
-        from .storage import Location
-
-        from ..log import SetTransaction
-
-        loc = Location.resolve(self.path)
-        log_loc = loc.join("_delta_log")
-        log = DeltaLog.load(log_loc)
-        if self.txn is not None and log:
-            seen = log.latest_txn_version(self.txn[0])
-            if seen is not None and seen >= self.txn[1]:
-                # replay that slipped past the planning-time check
-                # (concurrent commit of the same txn): no-op the
-                # commit AND delete whatever the tasks wrote — these
-                # files are referenced by no log and vacuum would
-                # never reclaim them
-                self.abort(messages)
-                return
-        files = [f for m in messages if m is not None
-                 for f in m.files]
-        adds = [Add(path=f.rel_path, size=f.size,
-                    modificationTime=timestamp_ms(),
-                    partitionValues=f.partition_values or {},
-                    stats=f.stats_json)
-                for f in files if f.num_rows > 0]
-        if not adds and log and not self.overwrite \
+        t = DeltaTable(None, self.path)
+        adds = self._adds(messages)
+        if not adds and t.log and not self.overwrite \
                 and self.txn is None:
             return      # empty plain append: no-op (a txn append
             #             still commits, recording the watermark)
-        schema = _T.StructType.fromJson(json.loads(self.schema_json))
-
-        def build(log):
-            if not log:
-                entry = create_table_entry(schema, self.partition_cols,
-                                           loc.url, adds)
-                if any(isinstance(f.dataType, _T.TimestampNTZType)
-                       for f in schema.fields):
-                    up = Protocol(minReaderVersion=3, minWriterVersion=7)
-                    up.extra = {
-                        "readerFeatures": ["timestampNtz"],
-                        "writerFeatures": sorted(
-                            {"appendOnly", "invariants",
-                             "timestampNtz"})}
-                    entry.actions = [a for a in entry.actions
-                                     if not isinstance(a, Protocol)]
-                    entry.actions.insert(0, up)
-                return entry
-            if self.overwrite and self.dynamic:
-                from ..log import dynamic_overwrite_entry
-                return dynamic_overwrite_entry(
-                    adds, log.add_actions().values(), schema,
-                    self.partition_cols,
-                    base_metadata=log.metadata())
-            if self.overwrite:
-                return overwrite_table_entry(
-                    adds, log.add_actions().values(), schema,
-                    self.partition_cols,
-                    base_metadata=log.metadata())
-            return append_table_entry(adds, self.partition_cols)
-
-        def stamp_ict(entry):
-            if not log:
-                return
-            cfg = log.metadata().configuration or {}
-            if str(cfg.get("delta.enableInCommitTimestamps", "false")
-                   ).lower() != "true":
-                return
-            prev = log.last_ict()
-            ci = entry.commit_info
-            ict = max(timestamp_ms(),
-                      (prev + 1) if prev is not None else 0)
-            ci.extra["inCommitTimestamp"] = ict
-            ci.timestamp = ict
-            entry.actions.remove(ci)
-            entry.actions.insert(0, ci)
-
-        entry = build(log)
-
-        def stamp_txn(entry):
-            if self.txn is not None:
-                entry.actions.insert(0, SetTransaction(
-                    appId=self.txn[0], version=int(self.txn[1]),
-                    lastUpdated=timestamp_ms()))
-
-        stamp_txn(entry)
-        stamp_ict(entry)
-        for attempt in range(5):
-            try:
-                commit_entry(log_loc, log.version_to_write, entry)
-                return
-            except FileExistsError:
-                if self.overwrite and log:
-                    raise       # stale-snapshot removes: never replay
-                if attempt == 4:
-                    raise
-                log = DeltaLog.load(log_loc)
-                if self.txn is not None and log:
-                    seen = log.latest_txn_version(self.txn[0])
-                    if seen is not None and seen >= self.txn[1]:
-                        return    # a concurrent replay already landed
-                entry = build(log)
-                stamp_txn(entry)
-                stamp_ict(entry)
-
-    def abort(self, messages) -> None:
-        from .storage import Location
-        for m in messages:
-            for wf in (m.files if m is not None else []):
-                if wf.rel_path:
-                    f = Location.resolve(self.path).join(wf.rel_path)
-                    if f.exists():
-                        f.delete()
+        self._commit(t, adds, mode=WriteMode.overwrite if self.overwrite
+                     else WriteMode.append, dynamic=self.dynamic,
+                     txn=self.txn)

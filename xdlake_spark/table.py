@@ -118,14 +118,23 @@ class DeltaTable:
     """Immutable snapshot handle over a Delta table; mutators return a new
     ``DeltaTable`` (reference semantics, __init__.py:190,229,257,315,333)."""
 
-    def __init__(self, spark: SparkSession, location: "str | Location",
+    def __init__(self, spark: "SparkSession | None",
+                 location: "str | Location",
                  log_location: "str | Location | None" = None,
                  version: int | None = None,
                  storage_options: dict | None = None):
         """``storage_options``: per-table credentials threaded into both
         the data and log Locations (reference __init__.py:35-48,
         storage.py:61-76) — takes effect when no registered filesystem
-        prefix matches the URL."""
+        prefix matches the URL.
+
+        ``spark=None`` gives a LOG-ONLY handle: log replay, table
+        properties, ``verify_checksum`` and the commit pipeline
+        (``_commit``/``_commit_staged``: protocol checks, stamps, crc,
+        checkpoint, UniForm) never touch Spark, so a Python worker
+        without a session (the ``xdlake`` format sinks' ``commit``)
+        commits through the same code as :meth:`write`. Anything that
+        scans or writes data needs a session."""
         self.spark = spark
         self.storage_options = storage_options
         self.location = Location.resolve(location, storage_options)
@@ -1972,9 +1981,11 @@ class DeltaTable:
         ``max_commit_retries``: for APPEND commits only, retry a commit
         that lost the optimistic-concurrency race at the next version
         (appends commute, so replaying the same entry is safe — the data
-        files are already on disk and are not rewritten). Non-append
-        modes always surface FileExistsError: their entries were built
-        against a snapshot that no longer is the head.
+        files are already on disk and are not rewritten); a creating
+        append that loses to a concurrent create of the same schema
+        becomes an append. Non-append modes always surface
+        FileExistsError: their entries were built against a snapshot
+        that no longer is the head (see :meth:`_commit_staged`).
 
         ``max_records_per_file``: cap rows per output file — Spark's
         ``maxRecordsPerFile`` writer option, executor-side roll-over with
@@ -2015,15 +2026,8 @@ class DeltaTable:
         mode = WriteMode.coerce(mode)
         schema_mode_e = SchemaMode.coerce(schema_mode)
 
-        if txn is not None:
-            seen = self.txn_version(str(txn[0])) if self.log else None
-            if seen is not None and seen >= int(txn[1]):
-                return self            # idempotent replay: no-op
-            from .log.actions import SetTransaction
-            _extra_actions = list(_extra_actions or []) + [
-                SetTransaction(appId=str(txn[0]),
-                               version=int(txn[1]),
-                               lastUpdated=timestamp_ms())]
+        if self._txn_applied(txn):
+            return self                # idempotent replay: no-op
         if replace_where is not None and mode != WriteMode.overwrite:
             raise ValueError(
                 "replace_where requires mode='overwrite'")
@@ -2127,69 +2131,112 @@ class DeltaTable:
         if wm_schema is not None:
             schema = wm_schema
 
-        if not self.log:
-            entry = create_table_entry(schema, partition_by,
-                                       self.location.url, new_adds,
-                                       custom_metadata)
-        elif mode == WriteMode.overwrite and replace_where is not None:
-            entry = self._replace_where_entry(
-                new_adds, replace_where, schema, partition_by,
-                custom_metadata, new_df=df)
-        elif mode == WriteMode.overwrite and dynamic:
-            # dynamic partition overwrite: tombstone exactly the
-            # partitions the new data landed in — chosen from
-            # partitionValues, no scan, no extra jobs (on an
-            # unpartitioned table this degrades to a full overwrite:
-            # there is only the one partition)
-            entry = dynamic_overwrite_entry(
-                new_adds, self.adds.values(), schema, partition_by,
-                base_metadata=self.log.metadata(),
-                custom_metadata=custom_metadata)
-        elif mode == WriteMode.overwrite:
-            entry = overwrite_table_entry(
-                new_adds, self.adds.values(), schema, partition_by,
-                custom_metadata, base_metadata=self.log.metadata())
-        else:
-            evolved = schema if (wm_schema is not None or
-                                 not schemas_match(schema, self.schema)) \
-                else None
-            entry = append_table_entry(new_adds, partition_by,
-                                       schema=evolved,
-                                       custom_metadata=custom_metadata)
-            self._decorate_entry(entry, _extra_actions, _operation,
-                                 _operation_params)
-            handle = self
-            for attempt in range(max_commit_retries + 1):
-                try:
-                    return handle._commit(entry) \
-                        ._maybe_auto_compact(new_adds)
-                except FileExistsError:
-                    if attempt == max_commit_retries:
+        return self._commit_staged(
+            new_adds, schema, partition_by, mode, dynamic=dynamic,
+            replace_where=replace_where, new_df=df,
+            custom_metadata=custom_metadata, txn=txn,
+            max_commit_retries=max_commit_retries,
+            redeclare_schema=wm_schema is not None,
+            extra_actions=_extra_actions, operation=_operation,
+            operation_params=_operation_params,
+        )._maybe_auto_compact(new_adds)
+
+    def _txn_applied(self, txn: "tuple[str, int] | None") -> bool:
+        """True when this snapshot already recorded ``txn=(app_id,
+        version)``, or a later version of the same app."""
+        if txn is None or not self.log:
+            return False
+        seen = self.txn_version(str(txn[0]))
+        return seen is not None and seen >= int(txn[1])
+
+    def _commit_staged(self, new_adds: "list[Add]", schema: T.StructType,
+                       partition_by: list[str],
+                       mode: WriteMode, *,
+                       dynamic: bool = False,
+                       replace_where: "str | None" = None,
+                       new_df: "DataFrame | None" = None,
+                       custom_metadata: dict | None = None,
+                       txn: "tuple[str, int] | None" = None,
+                       max_commit_retries: int = 0,
+                       redeclare_schema: bool = False,
+                       extra_actions: list | None = None,
+                       operation: "str | None" = None,
+                       operation_params: dict | None = None
+                       ) -> "DeltaTable":
+        """Commit data files a writer already staged: the one commit
+        tail of :meth:`write` and the ``xdlake`` format sinks, which
+        call it on a log-only ``DeltaTable(None, path)`` (only
+        ``replace_where``'s survivor scan needs a session). A ``txn``
+        already recorded is a no-op that deletes the staged files —
+        checked again after every lost race, since the winner may be a
+        replay of this txn. A lost append replays the same entry up to
+        ``max_commit_retries`` times; a lost create in append mode
+        becomes an append when the winner created the same schema and
+        partitioning; overwrites never replay. ``redeclare_schema``
+        forces the append's metaData (identity watermarks); the last
+        three arguments go to :meth:`_decorate_entry`."""
+        if txn is not None:
+            from .log.actions import SetTransaction
+            extra_actions = list(extra_actions or []) + [
+                SetTransaction(appId=str(txn[0]), version=int(txn[1]),
+                               lastUpdated=timestamp_ms())]
+
+        def build(t: "DeltaTable") -> DeltaLogEntry:
+            if not t.log:
+                entry = create_table_entry(schema, partition_by,
+                                           t.location.url, new_adds,
+                                           custom_metadata)
+            elif mode == WriteMode.overwrite and replace_where is not None:
+                entry = t._replace_where_entry(
+                    new_adds, replace_where, schema, partition_by,
+                    custom_metadata, new_df=new_df)
+            elif mode == WriteMode.overwrite and dynamic:
+                # tombstone exactly the partitions the new data
+                # landed in, chosen from partitionValues (no scan)
+                entry = dynamic_overwrite_entry(
+                    new_adds, t.adds.values(), schema, partition_by,
+                    base_metadata=t.log.metadata(),
+                    custom_metadata=custom_metadata)
+            elif mode == WriteMode.overwrite:
+                entry = overwrite_table_entry(
+                    new_adds, t.adds.values(), schema, partition_by,
+                    custom_metadata, base_metadata=t.log.metadata())
+            else:
+                evolved = schema if (redeclare_schema or not
+                                     schemas_match(schema, t.schema)) \
+                    else None
+                entry = append_table_entry(new_adds, partition_by,
+                                           schema=evolved,
+                                           custom_metadata=custom_metadata)
+            self._decorate_entry(entry, extra_actions, operation,
+                                 operation_params)
+            return entry
+
+        handle, entry = self, None
+        for attempt in range(max_commit_retries + 1):
+            if handle._txn_applied(txn):
+                for a in new_adds:
+                    f = self.location.join(a.path)
+                    if f.exists():
+                        f.delete()
+                return handle
+            if entry is None:
+                entry = build(handle)
+            try:
+                return handle._commit(entry)
+            except FileExistsError:
+                if mode != WriteMode.append \
+                        or attempt == max_commit_retries:
+                    raise
+                created = not handle.log
+                handle = type(self)(self.spark, self.location,
+                                    self.log_location)
+                if created:
+                    if handle.partition_columns != list(partition_by) \
+                            or not schemas_match(schema, handle.schema):
                         raise
-                    # lost the optimistic-concurrency race: reload the
-                    # head and replay the same append at the next version
-                    handle = type(self)(self.spark, self.location,
-                                        self.log_location)
-                    if txn is not None:
-                        # the racing winner may have been a concurrent
-                        # replay of THIS txn — replaying the entry
-                        # would double-apply exactly what the
-                        # watermark exists to prevent
-                        seen = handle.txn_version(str(txn[0]))
-                        if seen is not None and seen >= int(txn[1]):
-                            # no log entry will ever reference the
-                            # files this attempt staged — delete them
-                            # now (vacuum only reclaims tombstoned
-                            # paths, so they'd otherwise leak forever;
-                            # mirrors _XdlakeBatchWriter.abort)
-                            for a in new_adds:
-                                f = self.location.join(a.path)
-                                if f.exists():
-                                    f.delete()
-                            return handle
-        self._decorate_entry(entry, _extra_actions, _operation,
-                             _operation_params)
-        return self._commit(entry)._maybe_auto_compact(new_adds)
+                    entry = None      # rebuild as an append
+        raise AssertionError("unreachable")
 
     def _replace_where_entry(self, new_adds: "list[Add]",
                              where_sql: str, schema, partition_by,
