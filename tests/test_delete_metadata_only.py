@@ -9,17 +9,7 @@ import pytest
 from xdlake_spark import DeltaTable
 from xdlake_spark.plans.skipping import split_certain_matches
 
-from .utils import gen_pdf
-
-
-def _jobs_during(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "must be job-free")
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+from .utils import gen_pdf, jobs_during
 
 
 class TestSplitCertain:
@@ -172,7 +162,7 @@ class TestMetadataOnlyDelete:
         t = t.write(spark.createDataFrame(pdf), partition_by=["cats"])
         want_deleted = int((pdf["cats"] == "S").sum())
 
-        t2, jobs = _jobs_during(
+        t2, jobs = jobs_during(
             spark, "meta-delete", lambda: t.delete("cats = 'S'"))
         assert jobs == [], f"metadata-only delete ran jobs: {jobs}"
         assert t2.to_df().filter("cats = 'S'").count() == 0
@@ -187,7 +177,7 @@ class TestMetadataOnlyDelete:
         pdf = gen_pdf(90)
         t = DeltaTable(spark, str(tmp_path / "t"))
         t = t.write(spark.createDataFrame(pdf), partition_by=["bats"])
-        t2, jobs = _jobs_during(
+        t2, jobs = jobs_during(
             spark, "meta-delete-in",
             lambda: t.delete("bats IN ('1', '3')"))
         assert jobs == []
@@ -216,7 +206,7 @@ class TestMetadataOnlyDelete:
         t = t.write(spark.createDataFrame(gen_pdf(90)),
                     partition_by=["cats"])
         t = t.set_properties({"delta.enableDeletionVectors": "true"})
-        t2, jobs = _jobs_during(
+        t2, jobs = jobs_during(
             spark, "meta-delete-dv", lambda: t.delete("cats = 'D'"))
         assert jobs == []
         assert t2.to_df().filter("cats = 'D'").count() == 0
@@ -255,7 +245,7 @@ class TestMetadataOnlyDelete:
         open(log_file, "w").write("\n".join(lines) + "\n")
         t = DeltaTable(spark, str(tmp_path / "t"))
         n_s = t.to_df().filter("cats = 'S'").count()
-        t2, jobs = _jobs_during(
+        t2, jobs = jobs_during(
             spark, "meta-delete-nostats",
             lambda: t.delete("cats = 'S'"))
         assert jobs != []  # must scan: no row counts to report
@@ -268,7 +258,7 @@ class TestMetadataOnlyCount:
     def test_plain_count_runs_zero_jobs(self, spark, tmp_table_dir):
         t = DeltaTable(spark, tmp_table_dir).write(
             spark.createDataFrame(gen_pdf(90)), partition_by=["cats"])
-        n, jobs = _jobs_during(spark, "meta-count", t.count)
+        n, jobs = jobs_during(spark, "meta-count", t.count)
         assert jobs == [] and n == 90
 
     def test_partition_predicate_count_zero_jobs(self, spark,
@@ -277,7 +267,7 @@ class TestMetadataOnlyCount:
         t = DeltaTable(spark, str(tmp_path / "t")).write(
             spark.createDataFrame(pdf), partition_by=["cats"])
         want = int((pdf["cats"] == "S").sum())
-        n, jobs = _jobs_during(spark, "meta-count-p",
+        n, jobs = jobs_during(spark, "meta-count-p",
                                lambda: t.count("cats = 'S'"))
         assert jobs == [] and n == want
 
@@ -293,5 +283,5 @@ class TestMetadataOnlyCount:
             spark.createDataFrame(gen_pdf(60)).coalesce(2))
         t = t.delete("flag = true", mode="merge-on-read")
         live = t.to_df().count()
-        n, jobs = _jobs_during(spark, "meta-count-dv", t.count)
+        n, jobs = jobs_during(spark, "meta-count-dv", t.count)
         assert jobs == [] and n == live

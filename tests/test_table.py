@@ -16,7 +16,7 @@ from xdlake_spark import CommitConflictError, DeltaTable
 from xdlake_spark.log import DeltaLog
 from xdlake_spark.sources.storage import Location
 
-from .utils import assert_frames_equivalent, gen_pdf
+from .utils import assert_frames_equivalent, gen_pdf, jobs_during
 
 
 def write_rounds(spark, loc, n_rounds=3, partition_by=None, **kw):
@@ -3228,15 +3228,6 @@ class TestMetadataOnlyJobCounts:
     """Round-10 metadata ops must stay job-free on the driver:
     partitions() and verify_checksum() run zero Spark jobs."""
 
-    def _jobs_during(self, spark, group, fn):
-        sc = spark.sparkContext
-        sc.setJobGroup(group, "must be job-free")
-        try:
-            out = fn()
-        finally:
-            sc.setJobGroup(None, None)
-        return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
     def test_partitions_is_zero_jobs(self, spark, lineitem,
                                      tmp_table_dir):
         t = DeltaTable(spark, tmp_table_dir).write(
@@ -3244,14 +3235,14 @@ class TestMetadataOnlyJobCounts:
         # building the DataFrame must not scan anything; collecting
         # it runs exactly the local-relation job Spark charges for
         # createDataFrame, never a table read
-        df, jobs = self._jobs_during(
+        df, jobs = jobs_during(
             spark, "show-partitions-probe", t.partitions)
         assert jobs == [], jobs
 
     def test_verify_checksum_is_zero_jobs(self, spark, lineitem,
                                           tmp_table_dir):
         t = DeltaTable(spark, tmp_table_dir).write(lineitem.limit(200))
-        out, jobs = self._jobs_during(
+        out, jobs = jobs_during(
             spark, "verify-checksum-probe", t.verify_checksum)
         assert out == [] and jobs == [], (out, jobs)
 

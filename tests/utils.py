@@ -48,3 +48,15 @@ def assert_frames_equivalent(a: pd.DataFrame, b: pd.DataFrame) -> None:
     aa = aa[sorted(aa.columns)]
     bb = bb[sorted(bb.columns)]
     pd.testing.assert_frame_equal(aa, bb, check_dtype=False)
+
+
+def jobs_during(spark, group: str, fn):
+    """Run ``fn()`` under Spark job group ``group``; return its result
+    and the ids of the Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))

@@ -1782,6 +1782,8 @@ def delta_generate_manifest_read(spark, sf_dir):
     for mf in sorted(glob.glob(f"{mdir}/*/manifest")):
         paths += [u.replace("file://", "")
                   for u in open(mf).read().split()]
+    # an external engine reading the symlink manifest, so a plain
+    # Spark read, not DeltaTable._read_files
     return (spark.read.option("basePath", t.location.path)
             .parquet(*paths)
             .groupBy("l_returnflag")

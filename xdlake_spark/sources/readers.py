@@ -9,6 +9,8 @@ with ``spark.sql.legacy.parquet.nanosAsLong`` and rebuilds a proper
 
 from __future__ import annotations
 
+import contextlib
+
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,14 +26,30 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
             if pa.types.is_timestamp(f.type) and f.type.unit == "ns"]
 
 
+@contextlib.contextmanager
+def _session_conf(spark: SparkSession, key: str, value: str):
+    """Set a runtime SQL conf for the body only. On exit, even when the
+    body raises, the prior value comes back, or the key is unset if it
+    had none, so the session's other work keeps its configuration."""
+    conf = spark.conf
+    prev = conf.get(key, None)
+    conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            conf.unset(key)
+        else:
+            conf.set(key, prev)
+
+
 def read_parquet_any(spark: SparkSession, path: str) -> DataFrame:
     """spark.read.parquet that also handles ns-precision timestamps."""
     ns_cols = _nanos_timestamp_cols(path)
     if not ns_cols:
         return spark.read.parquet(path)
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
+    with _session_conf(spark, "spark.sql.legacy.parquet.nanosAsLong",
+                       "true"):
         df = spark.read.parquet(path)
         for c in ns_cols:
             # ns since epoch (long) -> us via integer division -> ntz
@@ -39,8 +57,6 @@ def read_parquet_any(spark: SparkSession, path: str) -> DataFrame:
                 c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
                 .cast("timestamp_ntz"))
         return df
-    finally:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
 
 
 def load_tables(spark: SparkSession, sf_dir: str,

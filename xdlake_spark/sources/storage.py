@@ -19,6 +19,7 @@ Backends:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import posixpath
 import re
@@ -284,7 +285,7 @@ class Location:
     def delete(self) -> None:
         fs = self._fs()
         if fs is None:
-            if os.path.exists(self.path):
+            with contextlib.suppress(FileNotFoundError):
                 os.remove(self.path)
             return
         import pyarrow.fs as pafs
