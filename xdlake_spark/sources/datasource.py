@@ -864,6 +864,10 @@ class XdlakeDataSource(DataSource):
         needs the session), tables with CHECK constraints, column
         invariants, generated or identity columns or column mapping
         ``name``/``id``, and an overwrite of a ``delta.appendOnly``
+        table. The commit skips auto-compaction
+        (``delta.autoOptimize.autoCompact``): compacting rewrites data,
+        which needs a session the commit does not have, so run
+        ``DeltaTable.optimize()`` after format writes to such a
         table."""
         pom = str(self.options.get("partitionOverwriteMode",
                                    "static")).lower()

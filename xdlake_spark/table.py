@@ -2274,10 +2274,8 @@ class DeltaTable:
         handle, entry = self, None
         for attempt in range(max_commit_retries + 1):
             if handle._txn_applied(txn):
-                for a in new_adds:
-                    f = self.location.join(a.path)
-                    if f.exists():
-                        f.delete()
+                _delete_on_driver(self.location,
+                                  [a.path for a in new_adds])
                 return handle
             if entry is None:
                 entry = build(handle)
@@ -2326,25 +2324,12 @@ class DeltaTable:
         removes = [a.to_remove() for a in certain.values()]
         survivor_adds: list[Add] = []
         if rest:
-            rel_of = self._rel_by_uri(rest)
-            per_file = (self._scan(rest)
-                        .withColumn("__xdl_file", F.input_file_name())
-                        .groupBy("__xdl_file")
-                        .agg(F.count(F.lit(1)).alias("total"),
-                             F.sum(pred.cast("long")).alias("hits"))
-                        .collect())
-            hit_rels = [rel_of(r["__xdl_file"]) for r in per_file
-                        if (r["hits"] or 0) > 0]
-            n_survivors = sum(int(r["total"]) - int(r["hits"] or 0)
-                              for r in per_file if (r["hits"] or 0) > 0)
-            if hit_rels:
-                hit_adds = {r: self.adds[r] for r in hit_rels}
-                if n_survivors > 0:
-                    survivor_adds = self._write_data(
-                        self._scan(hit_adds).filter(~pred),
-                        self.partition_columns)
-                removes.extend(self.adds[r].to_remove()
-                               for r in hit_rels)
+            hit_adds, _, n_survivors = self._touched_files(rest, pred)
+            if n_survivors > 0:
+                survivor_adds = self._write_data(
+                    self._scan(hit_adds).filter(~pred),
+                    self.partition_columns)
+            removes.extend(a.to_remove() for a in hit_adds.values())
         md = replaced_metadata(self.log.metadata(), schema,
                                partition_by)
         commit = TableCommit.write(mode=WriteMode.overwrite.value,
@@ -3341,13 +3326,9 @@ class DeltaTable:
             from .log.iceberg import generate_iceberg_metadata
             try:
                 generate_iceberg_metadata(new)
-                try:
-                    stale = new.location.join(
-                        "metadata").join("_conversion_stale.json")
-                    if stale.exists():
-                        stale.delete()
-                except Exception:
-                    pass
+                with contextlib.suppress(Exception):
+                    _delete_if_present(new.location.join(
+                        "metadata").join("_conversion_stale.json"))
             except Exception as e:
                 _logger.warning(
                     "UniForm: Iceberg snapshot generation FAILED at "
@@ -3433,173 +3414,218 @@ class DeltaTable:
                     raise
         raise AssertionError("unreachable")
 
-    # -- delete (copy-on-write) -------------------------------------------------
+    # -- the DML core: delete / update / replaceWhere / merge -----------------
+    #
+    # Every row-level operation is find → rewrite-or-mask → commit: a
+    # manifest prune, one touched-file job or deletion-vector mask, a
+    # rewrite of only the hit files, and one conflict-checked commit.
+
+    def _dml_mode(self, mode: str, op: str) -> str:
+        """Resolve a DELETE/UPDATE ``mode``: ``auto`` is merge-on-read
+        when the table property ``delta.enableDeletionVectors`` is
+        ``true`` (the delta-spark opt-in convention), copy-on-write
+        otherwise. icebergCompatV2 forbids DV writes, so ``auto`` falls
+        back to copy-on-write there (an explicit ``merge-on-read`` still
+        fails loudly at commit)."""
+        if mode not in ("auto", "copy-on-write", "merge-on-read"):
+            raise ValueError(f"unknown {op} mode {mode!r}")
+        if mode != "auto":
+            return mode
+        cfg = self.log.metadata().configuration or {}
+        dv = str(cfg.get("delta.enableDeletionVectors", "false")
+                 ).lower() == "true"
+        return "merge-on-read" if dv and not self.iceberg_compat_enabled \
+            else "copy-on-write"
+
+    def _touched_files(self, candidates: dict[str, Add], pred
+                       ) -> "tuple[dict[str, Add], int, int]":
+        """The touched-file job: one aggregation over the candidate files
+        grouped on ``input_file_name()``. Returns the files holding a
+        ``pred``-matching row (sorted by path), the matching rows, and
+        the other rows of those files — the rows a copy-on-write rewrite
+        copies. Rows a deletion vector masks never reach the scan, so
+        neither count includes them."""
+        rel_of = self._rel_by_uri(candidates)
+        per_file = (self._scan(candidates)
+                    .withColumn("__xdl_file", F.input_file_name())
+                    .groupBy("__xdl_file")
+                    .agg(F.count(F.lit(1)).alias("total"),
+                         F.sum(pred.cast("long")).alias("hits"))
+                    .collect())  # one row per candidate file: driver-safe
+        hit = [r for r in per_file if (r["hits"] or 0) > 0]
+        hit_adds = {p: candidates[p]
+                    for p in sorted(rel_of(r["__xdl_file"]) for r in hit)}
+        n_hit = sum(int(r["hits"]) for r in hit)
+        return hit_adds, n_hit, sum(int(r["total"]) for r in hit) - n_hit
+
+    def _post_image(self, df: DataFrame, assign: dict[str, str],
+                    pred: "Column | None" = None) -> DataFrame:
+        """UPDATE's post-image of ``df``: each ``assign`` column set to
+        its SQL expression — only on rows matching ``pred`` when given,
+        so a copy-on-write rewrite copies the others verbatim — and cast
+        to the column type. Generated columns not SET are recomputed (a
+        SET may have changed their inputs); SET ones are verified."""
+        sel = []
+        for f in self.schema.fields:
+            if f.name not in assign:
+                sel.append(F.col(f.name))
+                continue
+            v = F.expr(assign[f.name])
+            if pred is not None:
+                v = F.when(pred, v).otherwise(F.col(f.name))
+            sel.append(v.cast(f.dataType).alias(f.name))
+        return self._apply_generated_columns(df.select(sel),
+                                             provided={*assign})
+
+    def _dml(self, mode: str, candidates: dict[str, Add], pred,
+             where_sql: "str | None", predicate: str,
+             custom_metadata: dict | None, *,
+             assign: "dict[str, str] | None" = None,
+             certain: "dict[str, Add] | None" = None) -> "DeltaTable":
+        """The DML core: DELETE (``assign=None``) or UPDATE ``SET
+        assign`` of the rows of ``candidates`` that match ``pred``, by
+        the resolved ``mode`` (strategies: :meth:`delete`). Files in
+        ``certain`` are proven fully matched from partition values and
+        are tombstoned from the manifest alone.
+
+        Copy-on-write runs the touched-file job, then rewrites only the
+        hit files. Merge-on-read masks the matched rows first
+        (:meth:`_dv_mask_files`) and then appends their post-images, so
+        an UPDATE that matches nothing writes nothing. Both commit
+        through :meth:`_dml_commit`, with the deleted rows or the update
+        pre- and post-images as change data on CDF tables."""
+        update = assign is not None
+        adds: list[Add] = []
+        removes: list = []
+        hit_adds: dict[str, Add] = {}
+        n_hit = n_copied = 0
+        n_dv = None                    # DV re-adds; None when no mask ran
+        if candidates and mode == "merge-on-read":
+            adds, removes, n_hit, hit_rels = \
+                self._dv_mask_files(candidates, pred)
+            n_dv = len(adds)
+            hit_adds = {r: self.adds[r] for r in hit_rels}
+            if update and hit_adds:
+                adds += self._write_data(self._apply_constraints(
+                    self._post_image(self._scan(hit_adds).filter(pred),
+                                     assign)), self.partition_columns)
+        elif candidates:
+            hit_adds, n_hit, n_copied = self._touched_files(candidates,
+                                                            pred)
+            if update and hit_adds:
+                adds = self._write_data(self._apply_constraints(
+                    self._post_image(self._scan(hit_adds), assign, pred)),
+                    self.partition_columns)
+            elif n_copied:
+                adds = self._write_data(
+                    self._scan(hit_adds).filter(~pred),
+                    self.partition_columns)
+            removes = [a.to_remove() for a in hit_adds.values()]
+        certain = certain or {}
+        removes += [a.to_remove() for a in certain.values()]
+        n_hit += sum(self._live_row_count(a) or 0 for a in certain.values())
+
+        metrics = {"num_added_files": len(adds) - (n_dv or 0),
+                   "num_removed_files": len(removes) - (n_dv or 0)}
+        metrics.update({"num_updated_rows": n_hit,
+                        "num_copied_rows": n_copied} if update else
+                       {"num_copied_rows": n_copied,
+                        "num_deleted_rows": n_hit})
+        if n_dv is not None and removes:
+            metrics["num_deletion_vectors_added"] = n_dv
+        cdc = None
+        if self.cdf_enabled and hit_adds:
+            matched = self._scan(hit_adds).filter(pred)
+            cdc = matched.withColumn(
+                self._CHANGE_TYPE,
+                F.lit("update_preimage" if update else "delete"))
+            if update:
+                cdc = cdc.unionByName(
+                    self._post_image(matched, assign).withColumn(
+                        self._CHANGE_TYPE, F.lit("update_postimage")))
+        entry_of = update_table_entry if update else delete_table_entry
+        return self._dml_commit(
+            entry_of(adds, removes, predicate, self.version, metrics,
+                     custom_metadata),
+            self.version, cdc=cdc, where_sql=where_sql)
+
+    def _dml_commit(self, entry: DeltaLogEntry, read_version: int, *,
+                    cdc: "DataFrame | None" = None,
+                    where_sql: "str | None" = None) -> "DeltaTable":
+        """The DML commit tail: the deletionVectors protocol upgrade
+        when ``entry`` commits a DV descriptor (a commit that only
+        tombstones files needs none), the change-data files of ``cdc``,
+        and a conflict-checked commit read at ``read_version``."""
+        if any((a.extra or {}).get("deletionVector") for a in entry.adds):
+            proto_up = self._dv_protocol_action()
+            if proto_up is not None:
+                entry.actions.insert(0, proto_up)
+        if cdc is not None:
+            entry.actions.extend(self._write_change_data(cdc))
+        return self._commit_checked(entry, read_version,
+                                    where_sql=where_sql)
 
     def delete(self, where: "str | Column | None" = None,
                custom_metadata: dict | None = None,
                mode: str = "auto") -> "DeltaTable":
-        """Predicate delete; ``where=None`` deletes everything
-        (reference __init__.py:259-315).
+        """Predicate delete; ``where=None`` deletes everything as a pure
+        log commit (reference __init__.py:259-315).
 
-        ``mode`` picks the physical strategy:
+        DELETE and :meth:`update` share one core (:meth:`_dml`);
+        ``mode`` picks its physical strategy:
 
-        - ``"copy-on-write"`` (two-phase, file-granular): manifest
-          prune + one agg job grouped on ``input_file_name()`` finds
-          files that truly contain matching rows; one write job
-          rewrites the surviving rows of only those files.  Files fully
-          covered by the predicate are tombstoned without any rewrite.
+        - ``"copy-on-write"`` (file-granular): manifest prune + one agg
+          job grouped on ``input_file_name()`` finds the files that
+          truly hold matching rows; one write job rewrites only those
+          files — deleted rows dropped, or updated rows SET and the rest
+          copied verbatim.  A file left with no row is tombstoned
+          without a rewrite.
         - ``"merge-on-read"``: deletion vectors (Delta reader v3 /
           writer v7 feature).  No data file is rewritten — each hit
-          file gets a roaring bitmap of its deleted row positions
-          (spec DV file layout, log/dv.py) and is re-added with the
-          descriptor.  At 100 TB this turns "delete 10 rows from a
-          1 GB file" from a 1 GB rewrite into a KB-sized bitmap write;
-          every read surface anti-joins the positions back out
-          (:meth:`_scan`).  Fully-deleted files are tombstoned
-          directly (no pointless DV).
+          file gets a roaring bitmap of its matched row positions (spec
+          DV file layout, log/dv.py) and is re-added with the
+          descriptor; an update appends only the post-images of those
+          rows.  At 100 TB this turns "delete 10 rows from a 1 GB file"
+          from a 1 GB rewrite into a KB-sized bitmap write; every read
+          surface anti-joins the positions back out (:meth:`_scan`).
+          Fully-masked files are tombstoned directly (no pointless DV).
         - ``"auto"`` (default): merge-on-read when the table property
           ``delta.enableDeletionVectors`` is ``true`` (the delta-spark
           opt-in convention), copy-on-write otherwise.
+
+        Metadata-only fast path (delta-spark's partition-predicate
+        DELETE): a file whose PARTITION VALUES prove every row matches
+        is tombstoned straight from the manifest — no scan, no rewrite,
+        no DV. `DELETE WHERE date_part < '2023-01'` on a 100 TB
+        date-partitioned table is a pure log commit with ZERO Spark
+        jobs. Files without a usable live-row count scan instead, so
+        numDeletedRows stays exact; CDF tables always scan (the change
+        feed must materialize the deleted rows anyway).
         """
         self._require_mutable("DELETE")
         if self.schema is None:
             raise ValueError(f"No delta table at {self.location.url}")
-        if mode not in ("auto", "copy-on-write", "merge-on-read"):
-            raise ValueError(f"unknown delete mode {mode!r}")
-        if mode == "auto":
-            cfg = self.log.metadata().configuration or {}
-            mode = "merge-on-read" \
-                if str(cfg.get("delta.enableDeletionVectors", "false")
-                       ).lower() == "true" else "copy-on-write"
-            # icebergCompatV2 forbids DV writes — auto falls back to
-            # copy-on-write instead of failing at commit (an explicit
-            # mode="merge-on-read" still fails loudly there)
-            if mode == "merge-on-read" and self.iceberg_compat_enabled:
-                mode = "copy-on-write"
-        read_version = self.version
-
+        mode = self._dml_mode(mode, "delete")
         if where is None:
-            removes = [a.to_remove() for a in self.adds.values()]
-            deleted = sum((a.stats_dict or {}).get("numRecords", 0)
-                          for a in self.adds.values())
-            metrics = {
-                "num_added_files": 0,
-                "num_removed_files": len(removes),
-                "num_copied_rows": 0,
-                "num_deleted_rows": deleted,
-            }
-            entry = delete_table_entry([], removes, "true", read_version,
-                                       metrics, custom_metadata)
-            return self._commit_checked(entry, read_version)
+            return self._dml(mode, {}, None, None, "true", custom_metadata,
+                             certain=self.adds)
 
         where_sql = where if isinstance(where, str) else None
         pred = F.expr(where) if isinstance(where, str) else where
         pred = F.coalesce(pred, F.lit(False))  # null predicate keeps the row
-
-        candidates = self._pruned_adds(where_sql) \
-            if where_sql else dict(self.adds)
-        if not candidates:
-            entry = delete_table_entry(
-                [], [], where_sql or "<expr>", read_version,
-                {"num_added_files": 0, "num_removed_files": 0,
-                 "num_copied_rows": 0, "num_deleted_rows": 0},
-                custom_metadata)
-            return self._commit_checked(entry, read_version,
-                                        where_sql=where_sql)
-
-        # Metadata-only fast path (delta-spark's partition-predicate
-        # DELETE): a file whose PARTITION VALUES prove every row matches
-        # is tombstoned straight from the manifest — no scan, no
-        # rewrite, no DV. `DELETE WHERE date_part < '2023-01'` on a
-        # 100 TB date-partitioned table is a pure log commit with ZERO
-        # Spark jobs. Files without a usable live-row count fall back
-        # to the scanning path so numDeletedRows stays exact; CDF
-        # tables always scan (the change feed must materialize the
-        # deleted rows anyway).
+        candidates = self._pruned_adds(where_sql)
         certain: dict[str, Add] = {}
-        rest = candidates
         if where_sql and not self.cdf_enabled:
-            certain, rest = split_certain_matches(
+            certain, candidates = split_certain_matches(
                 candidates, where_sql, self.partition_columns,
                 self._partition_types())
-            unknown = {p for p, a in certain.items()
+            unknown = {p: a for p, a in certain.items()
                        if self._live_row_count(a) is None}
-            if unknown:
-                rest = {**rest,
-                        **{p: certain[p] for p in unknown}}
-                certain = {p: a for p, a in certain.items()
-                           if p not in unknown}
-        meta_removes = [a.to_remove() for a in certain.values()]
-        n_meta = sum(self._live_row_count(a) for a in certain.values())
-
-        if certain and not rest:
-            metrics = {
-                "num_added_files": 0,
-                "num_removed_files": len(meta_removes),
-                "num_copied_rows": 0,
-                "num_deleted_rows": int(n_meta),
-            }
-            entry = delete_table_entry([], meta_removes,
-                                       where_sql, read_version,
-                                       metrics, custom_metadata)
-            return self._commit_checked(entry, read_version,
-                                        where_sql=where_sql)
-
-        if mode == "merge-on-read":
-            return self._dv_delete(rest, pred, where_sql,
-                                   read_version, custom_metadata,
-                                   certain=certain)
-
-        rel_of = self._rel_by_uri(rest)
-
-        scan = self._scan(rest).withColumn(
-            "__xdl_file", F.input_file_name())
-        per_file = (scan.groupBy("__xdl_file")
-                    .agg(F.count(F.lit(1)).alias("total"),
-                         F.sum(pred.cast("long")).alias("hits"))
-                    .collect())  # one row per candidate file: driver-safe
-
-        hit_rels = [rel_of(r["__xdl_file"]) for r in per_file
-                    if (r["hits"] or 0) > 0]
-        n_deleted = sum(int(r["hits"] or 0) for r in per_file) + n_meta
-        n_survivors = sum(int(r["total"]) - int(r["hits"] or 0)
-                          for r in per_file if (r["hits"] or 0) > 0)
-
-        if not hit_rels and not meta_removes:
-            entry = delete_table_entry(
-                [], [], where_sql or "<expr>", read_version,
-                {"num_added_files": 0, "num_removed_files": 0,
-                 "num_copied_rows": 0, "num_deleted_rows": 0},
-                custom_metadata)
-            return self._commit_checked(entry, read_version,
-                                        where_sql=where_sql)
-
-        hit_adds = {r: self.adds[r] for r in hit_rels}
-        new_adds: list[Add] = []
-        if n_survivors > 0:
-            survivors = self._scan(hit_adds).filter(~pred)
-            new_adds = self._write_data(survivors, self.partition_columns)
-
-        removes = [self.adds[r].to_remove() for r in hit_rels] \
-            + meta_removes
-        metrics = {
-            "num_added_files": len(new_adds),
-            "num_removed_files": len(removes),
-            "num_copied_rows": int(n_survivors),
-            "num_deleted_rows": int(n_deleted),
-        }
-        entry = delete_table_entry(new_adds, removes,
-                                   where_sql or "<expr>", read_version,
-                                   metrics, custom_metadata)
-        if self.cdf_enabled:
-            # CDF: record the deleted rows as change data — readers of
-            # this commit then use the cdc files instead of mis-deriving
-            # spurious changes from the copy-on-write add/remove pairs
-            deleted_rows = self._scan(hit_adds).filter(pred).withColumn(
-                self._CHANGE_TYPE, F.lit("delete"))
-            entry.actions.extend(self._write_change_data(deleted_rows))
-        return self._commit_checked(entry, read_version,
-                                    where_sql=where_sql)
+            candidates = {**candidates, **unknown}
+            certain = {p: a for p, a in certain.items() if p not in unknown}
+        return self._dml(mode, candidates, pred, where_sql,
+                         where_sql or "<expr>", custom_metadata,
+                         certain=certain)
 
     def _dv_protocol_action(self) -> "Protocol | None":
         """Protocol upgrade for the first deletion-vector commit:
@@ -3650,8 +3676,8 @@ class DeltaTable:
         return up
 
     def _dv_mask_files(self, candidates: dict[str, Add], pred):
-        """Shared merge-on-read core: mask every pred-matching row out
-        of its file via deletion vectors.
+        """The DML core's merge-on-read step (:meth:`_dml`): mask every
+        pred-matching row out of its file via deletion vectors.
 
         One job: scan the candidate files (old DVs anti-joined out so
         already-deleted rows can't re-match), tag each row with its
@@ -3778,58 +3804,6 @@ class DeltaTable:
         desc = (add.extra or {}).get("deletionVector") or {}
         return int(nr) - int(desc.get("cardinality") or 0)
 
-    def _dv_delete(self, candidates: dict[str, Add], pred,
-                   where_sql: "str | None", read_version: int,
-                   custom_metadata: dict | None,
-                   certain: "dict[str, Add] | None" = None
-                   ) -> "DeltaTable":
-        """Merge-on-read DELETE: deletion-vector bitmaps instead of
-        rewriting data files (see :meth:`_dv_mask_files`). Files in
-        ``certain`` are fully covered by the predicate (proven from
-        partition values by the caller) and are tombstoned outright —
-        no scan, no pointless 100% DV."""
-        certain = certain or {}
-        meta_removes = [a.to_remove() for a in certain.values()]
-        n_meta = sum(self._live_row_count(a) for a in certain.values())
-        new_adds, removes, n_deleted, hit_rels = \
-            self._dv_mask_files(candidates, pred) if candidates \
-            else ([], [], 0, [])
-        if not hit_rels and not meta_removes:
-            entry = delete_table_entry(
-                [], [], where_sql or "<expr>", read_version,
-                {"num_added_files": 0, "num_removed_files": 0,
-                 "num_copied_rows": 0, "num_deleted_rows": 0},
-                custom_metadata)
-            return self._commit_checked(entry, read_version,
-                                        where_sql=where_sql)
-
-        removes = removes + meta_removes
-        metrics = {
-            "num_added_files": 0,
-            "num_removed_files": len(removes) - len(new_adds),
-            "num_copied_rows": 0,
-            "num_deleted_rows": int(n_deleted) + int(n_meta),
-            "num_deletion_vectors_added": len(new_adds),
-        }
-        entry = delete_table_entry(new_adds, removes,
-                                   where_sql or "<expr>", read_version,
-                                   metrics, custom_metadata)
-        # the feature upgrade is only needed when a DV descriptor is
-        # actually committed — a delete that merely tombstones files
-        # (fully-masked or partition-certain) adds no DV
-        proto_up = self._dv_protocol_action() if new_adds else None
-        if proto_up is not None:
-            entry.actions.insert(0, proto_up)
-        if self.cdf_enabled:
-            hit_adds = {r: self.adds[r] for r in hit_rels}
-            deleted_rows = self._scan(hit_adds).filter(pred).withColumn(
-                self._CHANGE_TYPE, F.lit("delete"))
-            entry.actions.extend(self._write_change_data(deleted_rows))
-        return self._commit_checked(entry, read_version,
-                                    where_sql=where_sql)
-
-    # -- update (copy-on-write) --------------------------------------------------
-
     def update(self, set: dict[str, str],
                where: "str | Column | None" = None,
                custom_metadata: dict | None = None,
@@ -3838,20 +3812,12 @@ class DeltaTable:
         parity like MERGE/OPTIMIZE/VACUUM).
 
         ``set`` maps target column -> SQL expression over the row's
-        current values.  ``mode`` picks the physical strategy (same
-        contract as :meth:`delete`):
-
-        - ``"copy-on-write"``: manifest prune + one agg job finds files
-          that truly contain matching rows; one write job rewrites ONLY
-          those files, applying ``set`` to matching rows and copying
-          the rest verbatim.
-        - ``"merge-on-read"``: deletion vectors mask the OLD versions
-          of matching rows out of their files (no rewrite of untouched
-          rows) and only the transformed rows append as new files — an
-          update of 10 rows in a 1 GB file writes a KB bitmap plus a
-          10-row file instead of a 1 GB rewrite.
-        - ``"auto"``: merge-on-read when the table property
-          ``delta.enableDeletionVectors`` is ``true``.
+        current values.  UPDATE runs the core of :meth:`delete`, whose
+        docstring gives the ``mode`` strategies: copy-on-write rewrites
+        only the hit files, and merge-on-read masks the old versions of
+        matching rows and appends only their post-images — an update
+        of 10 rows in a 1 GB file writes a KB bitmap plus a 10-row file
+        instead of a 1 GB rewrite.
 
         Untouched files keep their add actions.  CHECK constraints are
         enforced on every written row.  Updating a partition column
@@ -3869,164 +3835,26 @@ class DeltaTable:
                 raise ValueError(
                     f"cannot UPDATE identity column {c!r} (Delta "
                     "identity semantics: values are system-maintained)")
-        read_version = self.version
-
         where_sql = where if isinstance(where, str) else None
         if where is None:
             pred = F.lit(True)
         else:
             pred = F.expr(where) if isinstance(where, str) else where
             pred = F.coalesce(pred, F.lit(False))  # null pred skips row
-
-        candidates = (self._pruned_adds(where_sql)
-                      if where_sql else self.adds)
-        if mode not in ("auto", "copy-on-write", "merge-on-read"):
-            raise ValueError(f"unknown update mode {mode!r}")
-        if mode == "auto":
-            cfg = self.log.metadata().configuration or {}
-            mode = "merge-on-read" \
-                if str(cfg.get("delta.enableDeletionVectors", "false")
-                       ).lower() == "true" else "copy-on-write"
-            # icebergCompatV2 forbids DV writes — auto falls back to
-            # copy-on-write (same rule as DELETE)
-            if mode == "merge-on-read" and self.iceberg_compat_enabled:
-                mode = "copy-on-write"
-        if mode == "merge-on-read" and candidates:
-            return self._dv_update(candidates, set, pred, where_sql,
-                                   read_version, custom_metadata)
-        rel_of = self._rel_by_uri(candidates)
-        n_updated = 0
-        hit_rels: list[str] = []
-        if candidates:
-            scan = self._scan(candidates).withColumn(
-                "__xdl_file", F.input_file_name())
-            per_file = (scan.groupBy("__xdl_file")
-                        .agg(F.sum(pred.cast("long")).alias("hits"))
-                        .collect())  # one row per candidate file
-            hit_rels = sorted(rel_of(r["__xdl_file"]) for r in per_file
-                              if (r["hits"] or 0) > 0)
-            n_updated = sum(int(r["hits"] or 0) for r in per_file)
-
-        new_adds: list[Add] = []
-        n_copied = 0
-        if hit_rels:
-            hit_adds = {r: self.adds[r] for r in hit_rels}
-            n_copied = sum((a.stats_dict or {}).get("numRecords", 0)
-                           for a in hit_adds.values()) - n_updated
-            out_cols = [f.name for f in self.schema.fields]
-            sel = []
-            for c in out_cols:
-                expr = (F.when(pred, F.expr(set[c]))
-                        .otherwise(F.col(c))
-                        .cast(self.schema[c].dataType).alias(c)
-                        if c in set else F.col(c))
-                sel.append(expr)
-            rewritten = self._scan(hit_adds).select(sel)
-            # a SET may have changed a generated column's dependencies:
-            # recompute every generated column not explicitly SET
-            # (deterministic exprs leave untouched rows identical);
-            # explicitly-SET ones are verified against their expression
-            rewritten = self._apply_generated_columns(
-                rewritten, provided={*set})  # `set` = the SET dict here
-            new_adds = self._write_data(self._apply_constraints(rewritten),
-                                        self.partition_columns)
-
-        removes = [self.adds[r].to_remove() for r in hit_rels]
-        metrics = {
-            "num_added_files": len(new_adds),
-            "num_removed_files": len(removes),
-            "num_updated_rows": int(n_updated),
-            "num_copied_rows": int(max(n_copied, 0)),
-        }
-        entry = update_table_entry(new_adds, removes,
-                                   where_sql or "true", read_version,
-                                   metrics, custom_metadata)
-        if self.cdf_enabled and hit_rels:
-            # CDF: pre- and post-images of exactly the matched rows
-            hit_adds_cdf = {r: self.adds[r] for r in hit_rels}
-            matched = self._scan(hit_adds_cdf).filter(pred)
-            pre = matched.withColumn(self._CHANGE_TYPE,
-                                     F.lit("update_preimage"))
-            out_cols = [f.name for f in self.schema.fields]
-            post = matched.select([
-                F.expr(set[c]).cast(self.schema[c].dataType).alias(c)
-                if c in set else F.col(c) for c in out_cols])
-            post = self._apply_generated_columns(post, provided={*set})
-            post = post.withColumn(self._CHANGE_TYPE,
-                                   F.lit("update_postimage"))
-            entry.actions.extend(
-                self._write_change_data(pre.unionByName(post)))
-        return self._commit_checked(entry, read_version,
-                                    where_sql=where_sql)
-
-    def _dv_update(self, candidates: dict[str, Add],
-                   set: dict[str, str], pred,
-                   where_sql: "str | None", read_version: int,
-                   custom_metadata: dict | None) -> "DeltaTable":
-        """Merge-on-read UPDATE: deletion vectors mask the old row
-        versions (:meth:`_dv_mask_files`); ONLY the transformed
-        matching rows are written out as new files — the non-matching
-        rows of hit files are never rewritten."""
-        hit_scan = self._scan(candidates).filter(pred)
-        out_cols = [f.name for f in self.schema.fields]
-        post = hit_scan.select([
-            F.expr(set[c]).cast(self.schema[c].dataType).alias(c)
-            if c in set else F.col(c) for c in out_cols])
-        post = self._apply_generated_columns(post, provided={*set})
-        appended = self._write_data(self._apply_constraints(post),
-                                    self.partition_columns)
-
-        dv_adds, removes, n_updated, hit_rels = \
-            self._dv_mask_files(candidates, pred)
-        if not hit_rels:
-            # no matching rows: drop the (empty) appended files
-            for a in appended:
-                loc = self.location.join(a.path)
-                if loc.exists():
-                    loc.delete()
-            entry = update_table_entry(
-                [], [], where_sql or "true", read_version,
-                {"num_added_files": 0, "num_removed_files": 0,
-                 "num_updated_rows": 0, "num_copied_rows": 0},
-                custom_metadata)
-            return self._commit_checked(entry, read_version,
-                                        where_sql=where_sql)
-
-        new_adds = [*dv_adds, *appended]
-        metrics = {
-            "num_added_files": len(appended),
-            "num_removed_files": len(removes) - len(dv_adds),
-            "num_updated_rows": int(n_updated),
-            "num_copied_rows": 0,
-            "num_deletion_vectors_added": len(dv_adds),
-        }
-        entry = update_table_entry(new_adds, removes,
-                                   where_sql or "true", read_version,
-                                   metrics, custom_metadata)
-        proto_up = self._dv_protocol_action()
-        if proto_up is not None:
-            entry.actions.insert(0, proto_up)
-        if self.cdf_enabled:
-            hit_adds_cdf = {r: self.adds[r] for r in hit_rels}
-            matched = self._scan(hit_adds_cdf).filter(pred)
-            pre = matched.withColumn(self._CHANGE_TYPE,
-                                     F.lit("update_preimage"))
-            post_cdf = matched.select([
-                F.expr(set[c]).cast(self.schema[c].dataType).alias(c)
-                if c in set else F.col(c) for c in out_cols])
-            post_cdf = self._apply_generated_columns(post_cdf,
-                                                     provided={*set})
-            post_cdf = post_cdf.withColumn(self._CHANGE_TYPE,
-                                           F.lit("update_postimage"))
-            entry.actions.extend(
-                self._write_change_data(pre.unionByName(post_cdf)))
-        return self._commit_checked(entry, read_version,
-                                    where_sql=where_sql)
+        mode = self._dml_mode(mode, "update")
+        return self._dml(mode, self._pruned_adds(where_sql), pred,
+                         where_sql, where_sql or "true", custom_metadata,
+                         assign=set)
 
     #: Deleted-position count above which the DV anti-join degrades
     #: from a driver-built broadcast to a shuffle join (every DV
     #: read/mutation path shares this gate via _dv_positions_frame).
     _DV_BROADCAST_MAX = 2_000_000
+
+    #: Source rows up to which MERGE broadcast-hints its source — the
+    #: small-upsert case, where the probe and rewrite joins then never
+    #: shuffle the target scan.
+    _MERGE_BROADCAST_MAX_ROWS = 4_000_000
 
     def _dv_positions_frame(self, rows: "list[tuple[str, int]]"):
         """(file, position) deleted-row pairs → join-ready DataFrame.
@@ -5322,10 +5150,12 @@ class DeltaTable:
                     for p in paths:
                         _delete_if_present(root.join(p))
 
-                n_slices = max(1, min(256, len(doomed) // 16 or 1))
-                (self.spark.sparkContext
-                 .parallelize(doomed, n_slices)
-                 .foreachPartition(_rm))
+                # one slice per task slot: a task costs far more
+                # than the deletes it runs
+                sc = self.spark.sparkContext
+                sc.parallelize(doomed, max(1, min(len(doomed),
+                               sc.defaultParallelism))) \
+                    .foreachPartition(_rm)
             else:
                 _delete_on_driver(self.location, doomed)
         return doomed
@@ -5579,10 +5409,10 @@ class DeltaTable:
                           for s in sorted(sidecars - referenced))
         doomed = sorted(doomed)
         if not dry_run:
+            # in version order, so an interrupted clean-up leaves
+            # the retained log contiguous
             for rel in doomed:
-                loc = self.log_location.join(rel)
-                if loc.exists():
-                    loc.delete()
+                _delete_if_present(self.log_location.join(rel))
         return doomed
 
     def merge(self, source: Any, condition: str,
@@ -5598,7 +5428,6 @@ class DeltaTable:
               when_not_matched_by_source_delete: "bool | str" = False,
               when_not_matched_by_source: "list[dict] | None" = None,
               custom_metadata: dict | None = None,
-              broadcast_threshold_rows: int = 4_000_000,
               txn: "tuple[str, int] | None" = None,
               schema_evolution: bool = False) -> "DeltaTable":
         """MERGE INTO (SURVEY §2.5): join-on-condition + conditional rewrite.
@@ -5678,136 +5507,29 @@ class DeltaTable:
         files actually holding an affected row are rewritten — detected
         with one anti-join probe.
 
-        Scale: the source is counted once and broadcast-hinted when small
-        (the canonical small-upsert case — avoids shuffling the full target
-        scan in both the probe and rewrite joins); matched-row detection
+        Scale: the source is counted once and broadcast-hinted up to
+        ``_MERGE_BROADCAST_MAX_ROWS`` rows (the canonical small-upsert
+        case — avoids shuffling the full target scan in both the probe
+        and rewrite joins); matched-row detection
         uses an injected always-true marker column on the source, so a NULL
         in any real source column can never masquerade as "unmatched".
         """
         if self.schema is None:
             raise ValueError(f"No delta table at {self.location.url}")
-        # normalize WHEN MATCHED into an ordered clause list
-        # [(kind, assignments|None, condition|None), ...] — the engine
-        # below evaluates it first-match-wins regardless of which sugar
-        # produced it
-        def parse_upd_del(name: str, clauses: list) -> list:
-            """[(kind, assignments|None, condition|None), ...] from an
-            ordered update/delete clause list (when_matched and
-            when_not_matched_by_source share the shape)."""
-            out: list = []
-            for cl in clauses:
-                if not isinstance(cl, dict):
-                    raise ValueError(
-                        f"{name} clause must be a dict, got "
-                        f"{type(cl).__name__}")
-                actions = [k for k in ("update", "delete") if k in cl]
-                extra = set(cl) - {"update", "delete", "condition"}
-                if len(actions) != 1 or extra:
-                    raise ValueError(
-                        f"each {name} clause needs exactly one of "
-                        f"'update'/'delete' (+ optional 'condition'); "
-                        f"got keys {sorted(cl)}")
-                if actions[0] == "update":
-                    upd = cl["update"]
-                    if not isinstance(upd, dict) or not upd:
-                        raise ValueError(
-                            f"{name} update clause must map "
-                            "column -> SQL expression")
-                    out.append(("update", dict(upd), cl.get("condition")))
-                else:
-                    d = cl["delete"]
-                    cond_d = cl.get("condition")
-                    if isinstance(d, str):
-                        if cond_d is not None:
-                            raise ValueError(
-                                "give the delete condition once — "
-                                "either delete='cond' or "
-                                "condition='cond'")
-                        cond_d = d
-                    elif d is not True:
-                        raise ValueError(
-                            f"{name} delete clause must be True "
-                            "or a condition string")
-                    out.append(("delete", None, cond_d))
-            return out
-
-        matched_clauses: list = []
-        if when_matched is not None:
-            if (when_matched_update or when_matched_delete
-                    or when_matched_update_condition):
-                raise ValueError(
-                    "pass either when_matched=[...] or the "
-                    "when_matched_update/when_matched_delete/"
-                    "when_matched_update_condition kwargs, not both")
-            matched_clauses = parse_upd_del("when_matched", when_matched)
-        else:
-            if when_matched_update:
-                matched_clauses.append(
-                    ("update", when_matched_update,
-                     when_matched_update_condition))
-            if when_matched_delete:
-                matched_clauses.append(
-                    ("delete", None,
-                     when_matched_delete
-                     if isinstance(when_matched_delete, str) else None))
-
-        # WHEN NOT MATCHED BY SOURCE — same ordered-list machinery;
-        # scalar kwargs normalize to update-then-delete (the documented
-        # "update clause wins when both apply" is exactly
-        # first-match-wins over that order)
-        nmbs_clauses: list = []
-        if when_not_matched_by_source is not None:
-            if (when_not_matched_by_source_update
-                    or when_not_matched_by_source_delete
-                    or when_not_matched_by_source_update_condition):
-                raise ValueError(
-                    "pass either when_not_matched_by_source=[...] or "
-                    "the when_not_matched_by_source_update/_delete/"
-                    "_update_condition kwargs, not both")
-            nmbs_clauses = parse_upd_del("when_not_matched_by_source",
-                                         when_not_matched_by_source)
-        else:
-            if when_not_matched_by_source_update:
-                nmbs_clauses.append(
-                    ("update", when_not_matched_by_source_update,
-                     when_not_matched_by_source_update_condition))
-            if when_not_matched_by_source_delete:
-                nmbs_clauses.append(
-                    ("delete", None,
-                     when_not_matched_by_source_delete
-                     if isinstance(when_not_matched_by_source_delete,
-                                   str) else None))
-
-        # WHEN NOT MATCHED — ordered insert clause list
-        # [(assignments, condition|None), ...]
-        insert_clauses: list = []
-        if when_not_matched is not None:
-            if when_not_matched_insert or when_not_matched_insert_condition:
-                raise ValueError(
-                    "pass either when_not_matched=[...] or the "
-                    "when_not_matched_insert/"
-                    "when_not_matched_insert_condition kwargs, not both")
-            for cl in when_not_matched:
-                if not isinstance(cl, dict):
-                    raise ValueError(
-                        f"when_not_matched clause must be a dict, got "
-                        f"{type(cl).__name__}")
-                extra = set(cl) - {"insert", "condition"}
-                if "insert" not in cl or extra:
-                    raise ValueError(
-                        "each when_not_matched clause needs 'insert' "
-                        "(+ optional 'condition'); got keys "
-                        f"{sorted(cl)}")
-                ins_map = cl["insert"]
-                if not isinstance(ins_map, dict) or not ins_map:
-                    raise ValueError(
-                        "when_not_matched insert clause must map "
-                        "column -> SQL expression")
-                insert_clauses.append((dict(ins_map),
-                                       cl.get("condition")))
-        elif when_not_matched_insert:
-            insert_clauses.append((when_not_matched_insert,
-                                   when_not_matched_insert_condition))
+        # every clause family as an ordered [(kind, assignments|None,
+        # condition|None), ...] list — evaluated first-match-wins
+        # (_first_match) regardless of which sugar produced it
+        matched_clauses = _merge_clauses(
+            "when_matched", when_matched, when_matched_update,
+            when_matched_update_condition, when_matched_delete)
+        nmbs_clauses = _merge_clauses(
+            "when_not_matched_by_source", when_not_matched_by_source,
+            when_not_matched_by_source_update,
+            when_not_matched_by_source_update_condition,
+            when_not_matched_by_source_delete)
+        insert_clauses = _merge_clauses(
+            "when_not_matched", when_not_matched, when_not_matched_insert,
+            when_not_matched_insert_condition)
         if matched_clauses or nmbs_clauses:
             # insert-only MERGE is pure append and stays allowed
             self._require_mutable("MERGE with update/delete clauses")
@@ -5857,7 +5579,7 @@ class DeltaTable:
                                          self.partition_columns,
                                          self._partition_types())
 
-        if n_src <= broadcast_threshold_rows:
+        if n_src <= self._MERGE_BROADCAST_MAX_ROWS:
             src = F.broadcast(src)
         src = src.alias("s")
         cond = F.expr(condition)
@@ -5886,22 +5608,6 @@ class DeltaTable:
                 "(same error condition as Delta Lake MERGE)")
         rel_of = self._rel_by_uri(self.adds)
         hit_rels = sorted({rel_of(u) for u in matched_files})
-
-        def nmbs_actives(unmatched):
-            """Ordered first-match-wins activation predicates for the
-            WHEN NOT MATCHED BY SOURCE clause list, over rows where
-            ``unmatched`` holds: a row takes the first clause whose
-            condition evaluates TRUE (missing = always, NULL = does
-            not apply); later clauses never see it."""
-            claimed = F.lit(False)
-            out = []
-            for kind, assigns, cnd in nmbs_clauses:
-                gate = F.expr(cnd) if cnd else F.lit(True)
-                act = unmatched & ~claimed & F.coalesce(gate,
-                                                        F.lit(False))
-                out.append((kind, assigns, act))
-                claimed = claimed | act
-            return out
 
         # schema evolution: source-only columns join the table schema;
         # the rewrite/insert paths fill them with NULL wherever the
@@ -5934,11 +5640,8 @@ class DeltaTable:
             # need a rewrite (a file of fully-matched or gate-failing
             # rows stays untouched). One anti-join job. Clause ORDER is
             # irrelevant here: any gate holding marks the file.
-            gates = [F.expr(cnd) if cnd else F.lit(True)
-                     for _, _, cnd in nmbs_clauses]
-            any_gate = gates[0]
-            for g in gates[1:]:
-                any_gate = any_gate | g
+            any_gate = _any_of(F.expr(cnd) if cnd else F.lit(True)
+                               for _, _, cnd in nmbs_clauses)
             aff = (t.join(src, cond, "left_anti")
                    .filter(F.coalesce(any_gate, F.lit(False)))
                    .select("__xdl_file").distinct().collect())
@@ -5948,37 +5651,56 @@ class DeltaTable:
         out_cols = [f.name for f in evolved_schema.fields]
         # an assignment to a column the (possibly evolved) schema does
         # not hold was previously ignored silently — refuse instead
-        clause_assignments = [
-            (f"when_matched clause {i + 1} (update)", assigns)
-            for i, (kind, assigns, _) in enumerate(matched_clauses)
-            if kind == "update"]
-        clause_assignments += [
-            (f"when_not_matched clause {i + 1} (insert)", assigns)
-            for i, (assigns, _) in enumerate(insert_clauses)]
-        clause_assignments += [
-            (f"when_not_matched_by_source clause {i + 1} (update)",
-             assigns)
-            for i, (kind, assigns, _) in enumerate(nmbs_clauses)
-            if kind == "update"]
-        for label, clause in clause_assignments:
-            for c in (clause or {}):
-                if c not in out_cols:
-                    hint = ("" if schema_evolution else
-                            " (pass schema_evolution=True to adopt "
-                            "source-only columns)")
-                    raise ValueError(
-                        f"{label} assigns unknown column {c!r}{hint}")
+        for name, clauses in (("when_matched", matched_clauses),
+                              ("when_not_matched", insert_clauses),
+                              ("when_not_matched_by_source",
+                               nmbs_clauses)):
+            for i, (kind, assigns, _) in enumerate(clauses):
+                for c in (assigns or {}):
+                    if c not in out_cols:
+                        hint = ("" if schema_evolution else
+                                " (pass schema_evolution=True to adopt "
+                                "source-only columns)")
+                        raise ValueError(
+                            f"{name} clause {i + 1} ({kind}) assigns "
+                            f"unknown column {c!r}{hint}")
         new_adds: list[Add] = []
         cdc_df: DataFrame | None = None  # CDF rows accumulated per clause
 
-        def cdc_add(df: DataFrame):
+        def cdc_add(df: DataFrame, change_type: str):
             nonlocal cdc_df
+            df = df.withColumn(self._CHANGE_TYPE, F.lit(change_type))
             cdc_df = df if cdc_df is None else cdc_df.unionByName(df)
+
+        def fold(rows: DataFrame, acts: list) -> DataFrame:
+            """``rows`` with the active update/delete clauses ``acts``
+            applied: a deleted row drops, an updated row takes its
+            clause's assignments, any other row copies. CDF captures
+            the update pre- and post-images and the deleted rows."""
+            drop = _any_of(a for kind, _, a in acts if kind == "delete")
+            sel = [_case_assign(acts, c, tcol(c)).cast(typ[c]).alias(c)
+                   for c in out_cols]
+            if self.cdf_enabled:
+                t_sel = [tcol(c).cast(typ[c]).alias(c) for c in out_cols]
+                upd = rows.filter(
+                    _any_of(a for kind, _, a in acts if kind == "update"))
+                cdc_add(upd.select(t_sel), "update_preimage")
+                cdc_add(upd.select(sel), "update_postimage")
+                cdc_add(rows.filter(drop).select(t_sel), "delete")
+            return rows.filter(~drop).select(sel)
 
         if rewrite_rels:
             hit_adds = {r: self.adds[r] for r in rewrite_rels}
             th = self._scan(hit_adds).alias("t")
-            if not matched_clauses and nmbs_clauses:
+            if matched_clauses:
+                joined = th.join(src, cond, "left")
+                is_matched = F.col("s.__xdl_matched").isNotNull()
+                # the BY SOURCE chain runs over the unmatched rows of
+                # the same join — disjoint from the matched chain
+                rewritten = fold(joined,
+                                 _first_match(matched_clauses, is_matched)
+                                 + _first_match(nmbs_clauses, ~is_matched))
+            else:
                 # NMBS-only merge: matched rows pass through UNCHANGED,
                 # so the multi-match guard does not fire (Delta's rule
                 # covers modified rows only) — and a left join would
@@ -5988,101 +5710,9 @@ class DeltaTable:
                 # rows take the BY SOURCE clauses first-match-wins.
                 keep = (th.join(src, cond, "left_semi")
                         .select([tcol(c).alias(c) for c in out_cols]))
-                um = th.join(src, cond, "left_anti")
-                acts = nmbs_actives(F.lit(True))
-                drop = F.lit(False)
-                any_upd = F.lit(False)
-                for kind, _, act in acts:
-                    if kind == "update":
-                        any_upd = any_upd | act
-                    else:
-                        drop = drop | act
-                sel = []
-                for c in out_cols:
-                    branches = [(act, assigns[c])
-                                for kind, assigns, act in acts
-                                if kind == "update" and c in assigns]
-                    if branches:
-                        expr = F.when(branches[0][0],
-                                      F.expr(branches[0][1]))
-                        for cnd_b, ex in branches[1:]:
-                            expr = expr.when(cnd_b, F.expr(ex))
-                        expr = expr.otherwise(tcol(c))
-                    else:
-                        expr = tcol(c)
-                    sel.append(expr.cast(typ[c]).alias(c))
-                rewritten = keep.unionByName(um.filter(~drop).select(sel))
-                if self.cdf_enabled:
-                    t_sel = [tcol(c).cast(typ[c]).alias(c)
-                             for c in out_cols]
-                    upd = um.filter(any_upd)
-                    cdc_add(upd.select(t_sel).withColumn(
-                        self._CHANGE_TYPE, F.lit("update_preimage")))
-                    cdc_add(upd.select(sel).withColumn(
-                        self._CHANGE_TYPE, F.lit("update_postimage")))
-                    cdc_add(um.filter(drop).select(t_sel).withColumn(
-                        self._CHANGE_TYPE, F.lit("delete")))
-            elif matched_clauses:
-                joined = th.join(src, cond, "left")
-                is_matched = F.col("s.__xdl_matched").isNotNull()
-                # first-match-wins over the ordered clause list: a
-                # clause is active when the row matched, no EARLIER
-                # clause claimed it, and its condition holds. A NULL
-                # condition means "clause does not apply" (Delta
-                # semantics) — the row falls through to later clauses,
-                # never drops.
-                active: list = []  # (kind, assignments, predicate)
-                claimed = F.lit(False)
-                for kind, assigns, cnd in matched_clauses:
-                    gate = F.expr(cnd) if cnd else F.lit(True)
-                    act = (is_matched & ~claimed
-                           & F.coalesce(gate, F.lit(False)))
-                    active.append((kind, assigns, act))
-                    claimed = claimed | act
-                # BY SOURCE clauses run their own first-match-wins
-                # chain over the unmatched rows of the same join —
-                # disjoint from the matched chain by construction
-                # (gated on ~is_matched vs is_matched)
-                active.extend(nmbs_actives(~is_matched))
-                sel = []
-                for c in out_cols:
-                    # active predicates are mutually exclusive, so
-                    # only clauses assigning c need a branch — a row
-                    # claimed by a clause that leaves c alone falls to
-                    # the otherwise (target value)
-                    branches = [(act, assigns[c])
-                                for kind, assigns, act in active
-                                if kind == "update" and c in assigns]
-                    if branches:
-                        expr = F.when(branches[0][0], F.expr(branches[0][1]))
-                        for cnd_b, ex in branches[1:]:
-                            expr = expr.when(cnd_b, F.expr(ex))
-                        expr = expr.otherwise(tcol(c))
-                    else:
-                        expr = tcol(c)
-                    sel.append(expr.cast(typ[c]).alias(c))
-                any_upd = F.lit(False)
-                drop = F.lit(False)
-                for kind, _, act in active:
-                    if kind == "update":
-                        any_upd = any_upd | act
-                    else:
-                        drop = drop | act
-                rewritten = joined.filter(~drop).select(sel)
-                if self.cdf_enabled:
-                    t_sel = [tcol(c).cast(typ[c]).alias(c)
-                             for c in out_cols]
-                    upd = joined.filter(any_upd)
-                    cdc_add(upd.select(t_sel).withColumn(
-                        self._CHANGE_TYPE, F.lit("update_preimage")))
-                    cdc_add(upd.select(sel).withColumn(
-                        self._CHANGE_TYPE, F.lit("update_postimage")))
-                    cdc_add(joined.filter(drop).select(t_sel)
-                            .withColumn(self._CHANGE_TYPE,
-                                        F.lit("delete")))
-            else:
-                rewritten = th.select(
-                    [tcol(c).alias(c) for c in out_cols])
+                rewritten = keep.unionByName(fold(
+                    th.join(src, cond, "left_anti"),
+                    _first_match(nmbs_clauses, F.lit(True))))
             # generated columns: VERIFIED on the matched-rewrite path
             # (an UPDATE clause that broke one fails loudly with a
             # message naming the expression) — clause semantics make a
@@ -6093,47 +5723,30 @@ class DeltaTable:
                 self._apply_constraints(rewritten),
                 self.partition_columns))
 
+        wm_schema = None
         if insert_clauses:
-            anti = src.join(t, cond, "left_anti")
-            # whenNotMatchedInsert(condition=...) parity, generalized
-            # to the ordered list: an unmatched source row takes the
-            # FIRST clause whose condition holds; a row satisfying no
-            # clause is dropped, not inserted (a CDC apply must NOT
-            # insert a delete row whose key the target never held)
-            ins_active: list = []
-            claimed = F.lit(False)
-            for _, cnd in insert_clauses:
-                gate = F.expr(cnd) if cnd else F.lit(True)
-                act = ~claimed & F.coalesce(gate, F.lit(False))
-                ins_active.append(act)
-                claimed = claimed | act
-            anti = anti.filter(claimed)
-            # column DEFAULTs apply to unassigned columns per clause
-            # (delta-spark parity), before the null fallback
+            # an unmatched source row takes the FIRST insert clause
+            # whose condition holds; a row satisfying no clause is
+            # dropped, not inserted (a CDC apply must NOT insert a
+            # delete row whose key the target never held). Columns a
+            # clause leaves unassigned take their column DEFAULT, else
+            # NULL (delta-spark parity).
             defaults = self.column_defaults
-            sel = []
-            for c in out_cols:
-                branches = []
-                for (assigns, _), act in zip(insert_clauses, ins_active):
-                    if c in assigns:
-                        v = F.expr(assigns[c])
-                    elif c in defaults:
-                        v = F.expr(defaults[c])
-                    else:
-                        v = F.lit(None)
-                    branches.append((act, v))
-                expr = F.when(branches[0][0], branches[0][1])
-                for a, v in branches[1:]:
-                    expr = expr.when(a, v)
-                sel.append(expr.cast(typ[c]).alias(c))
-            ins = anti.select(sel)
+            acts = _first_match(
+                [(kind, {c: assigns.get(c, defaults.get(c, "NULL"))
+                         for c in out_cols}, cnd)
+                 for kind, assigns, cnd in insert_clauses], F.lit(True))
+            ins = (src.join(t, cond, "left_anti")
+                   .filter(_any_of(a for _, _, a in acts))
+                   .select([_case_assign(acts, c).cast(typ[c]).alias(c)
+                            for c in out_cols]))
             # generated columns: COMPUTED for columns no insert clause
             # assigns, verified for ones every clause assigns; a
             # generated/identity column assigned by SOME clauses only
             # would be verify-vs-compute ambiguous per row — refused
-            # at validation above. Identity columns likewise generated
-            # past the watermark.
-            assigned_sets = [set(a) for a, _ in insert_clauses]
+            # here. Identity columns likewise generated past the
+            # watermark.
+            assigned_sets = [set(a) for _, a, _ in insert_clauses]
             all_assigned = set.union(*assigned_sets)
             every_assigned = set.intersection(*assigned_sets)
             special = (set(self._generated_columns())
@@ -6151,13 +5764,11 @@ class DeltaTable:
             ins_adds = self._write_data(
                 self._apply_constraints(ins), self.partition_columns)
             new_adds.extend(ins_adds)
-            wm_schema = self._identity_watermark_schema(
-                ins_adds, id_touched) if id_touched else None
+            if id_touched:
+                wm_schema = self._identity_watermark_schema(ins_adds,
+                                                            id_touched)
             if self.cdf_enabled:
-                cdc_add(ins.withColumn(self._CHANGE_TYPE,
-                                       F.lit("insert")))
-        else:
-            wm_schema = None
+                cdc_add(ins, "insert")
 
         removes = [self.adds[r].to_remove() for r in rewrite_rels]
         metrics = {"numTargetFilesAdded": len(new_adds),
@@ -6184,15 +5795,113 @@ class DeltaTable:
                 self.log.metadata(),
                 schemaString=schema_to_string(decl))
             entry.actions.insert(0, md)
-        if self.cdf_enabled and cdc_df is not None:
-            # cdc_df covers every clause (update pre/post, deletes,
-            # inserts); its presence — even zero-row when all gates
-            # filtered — keeps CDF readers off the add/remove fallback,
-            # which would mis-derive the copy-on-write churn as changes
-            entry.actions.extend(self._write_change_data(cdc_df))
-        # MERGE reads the whole target (probe + anti joins): any
-        # concurrent add conflicts, so no where_sql narrowing here
-        return self._commit_checked(entry, read_version)
+        # cdc_df covers every clause (update pre/post, deletes, inserts);
+        # its presence — even zero-row when all gates filtered — keeps
+        # CDF readers off the add/remove fallback, which would mis-derive
+        # the copy-on-write churn as changes. MERGE reads the whole
+        # target (probe + anti joins): any concurrent add conflicts, so
+        # no where_sql narrowing here
+        return self._dml_commit(entry, read_version, cdc=cdc_df)
+
+
+def _merge_clauses(name: str, clauses: "list[dict] | None",
+                   assign: "dict[str, str] | None" = None,
+                   condition: "str | None" = None,
+                   delete: "bool | str" = False) -> list:
+    """One MERGE clause family as an ordered ``[(kind, assignments |
+    None, condition | None), ...]`` list. ``when_not_matched`` holds
+    insert clauses; ``when_matched`` and ``when_not_matched_by_source``
+    hold update and delete clauses. ``clauses`` is the list form; the
+    scalar kwargs are sugar for ``[{kind: assign, "condition":
+    condition}, {"delete": delete}]`` — update first, so "the update
+    clause wins when both apply" is first-match-wins over that order.
+    Passing both forms is an error."""
+    kinds = ("insert",) if name == "when_not_matched" \
+        else ("update", "delete")
+    if clauses is None:
+        clauses = []
+        if assign:
+            clauses.append({kinds[0]: assign, "condition": condition})
+        if delete:
+            clauses.append({"delete": delete if isinstance(delete, str)
+                            else True})
+    elif assign or condition or delete:
+        kwargs = [f"{name}_{k}" for k in (kinds[0], f"{kinds[0]}_condition",
+                                         *kinds[1:])]
+        raise ValueError(f"pass either {name}=[...] or the "
+                         f"{'/'.join(kwargs)} kwargs, not both")
+    need = f"'{kinds[0]}'" if len(kinds) == 1 else \
+        "exactly one of " + "/".join(f"'{k}'" for k in kinds)
+    out: list = []
+    for cl in clauses:
+        if not isinstance(cl, dict):
+            raise ValueError(f"{name} clause must be a dict, got "
+                             f"{type(cl).__name__}")
+        actions = [k for k in kinds if k in cl]
+        if len(actions) != 1 or set(cl) - {*kinds, "condition"}:
+            raise ValueError(
+                f"each {name} clause needs {need} (+ optional "
+                f"'condition'); got keys {sorted(cl)}")
+        kind, cond = actions[0], cl.get("condition")
+        if kind != "delete":
+            assigns = cl[kind]
+            if not isinstance(assigns, dict) or not assigns:
+                raise ValueError(f"{name} {kind} clause must map "
+                                 "column -> SQL expression")
+            out.append((kind, dict(assigns), cond))
+            continue
+        if isinstance(cl["delete"], str):
+            if cond is not None:
+                raise ValueError(
+                    "give the delete condition once — either "
+                    "delete='cond' or condition='cond'")
+            cond = cl["delete"]
+        elif cl["delete"] is not True:
+            raise ValueError(f"{name} delete clause must be True or a "
+                             "condition string")
+        out.append(("delete", None, cond))
+    return out
+
+
+def _first_match(clauses: list, scope: Column) -> list:
+    """Activation predicates of an ordered MERGE clause list, first-
+    match-wins per the Delta spec: a row where ``scope`` holds takes the
+    first clause whose condition is TRUE — a missing condition always
+    holds, a NULL one means "does not apply" and falls through — and
+    later clauses never see it. Returns ``[(kind, assignments, active),
+    ...]`` with mutually exclusive ``active`` predicates."""
+    claimed = F.lit(False)
+    out = []
+    for kind, assigns, cnd in clauses:
+        gate = F.expr(cnd) if cnd else F.lit(True)
+        act = scope & ~claimed & F.coalesce(gate, F.lit(False))
+        out.append((kind, assigns, act))
+        claimed = claimed | act
+    return out
+
+
+def _any_of(preds) -> Column:
+    """OR of the ``preds`` columns; FALSE when there are none."""
+    out = F.lit(False)
+    for p in preds:
+        out = out | p
+    return out
+
+
+def _case_assign(acts: list, col: str,
+                 otherwise: "Column | None" = None) -> Column:
+    """CASE WHEN for column ``col`` over :func:`_first_match`'s
+    mutually exclusive actives: one branch per clause assigning ``col``
+    (its SQL expression); a row no such clause claims takes
+    ``otherwise`` (NULL when omitted)."""
+    branches = [(act, assigns[col]) for kind, assigns, act in acts
+                if kind != "delete" and col in assigns]
+    if not branches:
+        return otherwise
+    expr = F.when(branches[0][0], F.expr(branches[0][1]))
+    for act, v in branches[1:]:
+        expr = expr.when(act, F.expr(v))
+    return expr if otherwise is None else expr.otherwise(otherwise)
 
 
 _EQUI_TERM = re.compile(
