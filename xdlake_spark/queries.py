@@ -1144,8 +1144,9 @@ def delta_update_dv_q(spark, sf_dir):
     """Merge-on-read UPDATE (the DML core, table.py
     ``DeltaTable._dml``): deletion vectors mask the old versions of
     matching rows; ONLY the transformed rows append as new files —
-    untouched rows of hit files are never rewritten. Same oracle as the copy-on-write variant: the two
-    strategies must be observationally identical."""
+    untouched rows of hit files are never rewritten. Same oracle as
+    the copy-on-write variant: the two strategies must be
+    observationally identical."""
     from .table import DeltaTable
     li = _t(spark, sf_dir, "lineitem")
     t = DeltaTable(spark, _delta_tmp()).write(

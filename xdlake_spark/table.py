@@ -441,18 +441,12 @@ class DeltaTable:
         # file as deleted. Decode each referenced bitmap (log/dv.py,
         # pure-numpy roaring reader) and anti-join the DV'd files' scan
         # on (file, _metadata.row_index); DV-free files scan untouched.
-        dv_adds = {p: a for p, a in adds.items()
-                   if (a.extra or {}).get("deletionVector")}
-        if dv_adds:
-            import dataclasses
-            clean = {p: a for p, a in adds.items() if p not in dv_adds}
-            stripped = {
-                p: dataclasses.replace(
-                    a, extra={k: v for k, v in (a.extra or {}).items()
-                              if k != "deletionVector"})
-                for p, a in dv_adds.items()}
-            df = self._apply_deletion_vectors(self._scan(stripped),
-                                              dv_adds)
+        deleted = self._deleted_rows(adds)
+        if deleted:
+            clean = {p: a for p, a in adds.items() if p not in deleted}
+            df = self._apply_deletion_vectors(
+                self._scan({p: _without_dv(adds[p]) for p in deleted}),
+                deleted)
             if clean:
                 df = self._scan(clean).unionByName(df)
             return df
@@ -3697,44 +3691,19 @@ class DeltaTable:
 
         import pandas as pd
 
-        from .log.dv import (deleted_row_indexes, deserialize_dv_data,
-                             serialize_dv_data, write_dv_files_packed)
+        from .log.dv import (deserialize_dv_data, serialize_dv_data,
+                             write_dv_files_packed)
 
-        dv_candidates = {p: a for p, a in candidates.items()
-                         if (a.extra or {}).get("deletionVector")}
-        stripped = {
-            p: (dataclasses.replace(
-                a, extra={k: v for k, v in (a.extra or {}).items()
-                          if k != "deletionVector"})
-                if p in dv_candidates else a)
-            for p, a in candidates.items()}
+        # each old DV is read once: for the anti-join that keeps masked
+        # rows from re-matching, and for the union into the new bitmap
+        old_dvs = self._deleted_rows(candidates)
         rel_of = self._rel_by_uri(candidates)
-
-        tagged = self._scan(stripped).withColumns({
-            "__xdl_file": F.input_file_name(),
-            "__xdl_pos": F.col("_metadata.row_index"),
-        })
-        if dv_candidates:
-            rows = []
-            for p, a in dv_candidates.items():
-                desc = (a.extra or {})["deletionVector"]
-                url = _norm_uri(self.location.absloc(p).url)
-                rows.extend((url, int(i)) for i in
-                            deleted_row_indexes(self.location, desc))
-            if rows:
-                already = self._dv_positions_frame(rows)
-                norm_file = F.url_decode(F.regexp_replace(
-                    F.regexp_replace(F.col("__xdl_file"),
-                                     "^[a-zA-Z0-9+.-]+://?", "/"),
-                    "^//+", "/"))
-                tagged = (tagged.withColumn("__xdl_nfile", norm_file)
-                          .join(already,
-                                (F.col("__xdl_nfile") ==
-                                 F.col("__dv_file")) &
-                                (F.col("__xdl_pos") ==
-                                 F.col("__dv_pos")),
-                                "left_anti")
-                          .drop("__xdl_nfile"))
+        tagged = self._apply_deletion_vectors(self._scan(
+            {p: _without_dv(a) if p in old_dvs else a
+             for p, a in candidates.items()}).withColumns({
+                 "__xdl_file": F.input_file_name(),
+                 "__xdl_pos": F.col("_metadata.row_index"),
+             }), old_dvs)
 
         def pack(pdf: pd.DataFrame) -> pd.DataFrame:
             data = serialize_dv_data(pdf["__xdl_pos"].tolist())
@@ -3758,11 +3727,8 @@ class DeltaTable:
             old = self.adds[rel]
             new_idx = deserialize_dv_data(bytes(row["dv"]))
             n_hit += int(row["hits"])
-            old_desc = (old.extra or {}).get("deletionVector")
-            all_idx = set(int(i) for i in new_idx)
-            if old_desc:
-                all_idx |= set(int(i) for i in deleted_row_indexes(
-                    self.location, old_desc))
+            all_idx = {int(i) for i in new_idx} | \
+                {int(i) for i in old_dvs.get(rel, ())}
             removes.append(old.to_remove())
             total = (old.stats_dict or {}).get("numRecords")
             if total is not None and len(all_idx) >= int(total):
@@ -3879,29 +3845,33 @@ class DeltaTable:
             df = F.broadcast(df)
         return df
 
-    def _apply_deletion_vectors(self, df: DataFrame,
-                                dv_adds: dict[str, Add]) -> DataFrame:
-        """Filter logically-deleted rows out of a scan of DV-bearing
-        files: decode each add's roaring bitmap (driver-side — DVs are
+    def _deleted_rows(self, adds: dict[str, Add]) -> dict:
+        """Manifest path -> deleted row positions of each add carrying a
+        deletion vector: its roaring bitmap decoded driver-side (DVs are
         per-file deleted-row sets, orders of magnitude smaller than the
-        data; cardinality-checked), build a (file, row_index) frame of
-        deleted positions, and LEFT ANTI join against the scan keyed on
-        ``_metadata.file_path`` + ``_metadata.row_index``. Broadcast
-        when small; past ~2M positions it degrades to a shuffle join,
-        still correct. Paths are normalized identically on both sides
-        (scheme stripped, url-decoded — the `_rel_by_uri` convention).
-        """
+        data; cardinality-checked)."""
         from .log.dv import deleted_row_indexes
+        return {p: deleted_row_indexes(self.location,
+                                       a.extra["deletionVector"])
+                for p, a in adds.items()
+                if (a.extra or {}).get("deletionVector")}
 
-        rows: list[tuple[str, int]] = []
-        for p, a in dv_adds.items():
-            desc = (a.extra or {})["deletionVector"]
-            idx = deleted_row_indexes(self.location, desc)
-            url = _norm_uri(self.location.absloc(p).url)
-            rows.extend((url, int(i)) for i in idx)
+    def _apply_deletion_vectors(self, df: DataFrame,
+                                deleted: dict) -> DataFrame:
+        """Filter logically-deleted rows out of a scan of DV-bearing
+        files: build a (file, row_index) frame of the ``deleted``
+        positions (:meth:`_deleted_rows`) and LEFT ANTI join it against
+        the scan keyed on ``_metadata.file_path`` +
+        ``_metadata.row_index``. Broadcast when small; past ~2M
+        positions it degrades to a shuffle join, still correct. Paths
+        are normalized identically on both sides (scheme stripped,
+        url-decoded — the `_rel_by_uri` convention).
+        """
+        rows = [(_norm_uri(self.location.absloc(p).url), int(i))
+                for p, idx in deleted.items() for i in idx]
         if not rows:
             return df
-        deleted = self._dv_positions_frame(rows)
+        dead = self._dv_positions_frame(rows)
         norm_file = F.url_decode(F.regexp_replace(F.regexp_replace(
             F.col("_metadata.file_path"),
             "^[a-zA-Z0-9+.-]+://?", "/"), "^//+", "/"))
@@ -3911,7 +3881,7 @@ class DeltaTable:
         })
         cond = (F.col("__xdl_dv_file") == F.col("__dv_file")) & \
             (F.col("__xdl_dv_pos") == F.col("__dv_pos"))
-        return (tagged.join(deleted, cond, "left_anti")
+        return (tagged.join(dead, cond, "left_anti")
                 .drop("__xdl_dv_file", "__xdl_dv_pos"))
 
     def _rel_by_uri(self, adds: dict[str, Add]) -> Callable[[str], str]:
@@ -4231,9 +4201,7 @@ class DeltaTable:
                     d.write_bytes(s.read_bytes())
 
         if len(rels) >= max(1, distributed_threshold):
-            n_slices = max(1, min(256, len(rels) // 16 or 1))
-            (self.spark.sparkContext
-             .parallelize(rels, n_slices).foreachPartition(_cp))
+            _foreach_slice(self.spark, rels, _cp)
         else:
             _cp(rels)
         md = dataclasses.replace(self.log.metadata(),
@@ -5150,12 +5118,7 @@ class DeltaTable:
                     for p in paths:
                         _delete_if_present(root.join(p))
 
-                # one slice per task slot: a task costs far more
-                # than the deletes it runs
-                sc = self.spark.sparkContext
-                sc.parallelize(doomed, max(1, min(len(doomed),
-                               sc.defaultParallelism))) \
-                    .foreachPartition(_rm)
+                _foreach_slice(self.spark, doomed, _rm)
             else:
                 _delete_on_driver(self.location, doomed)
         return doomed
@@ -5925,6 +5888,24 @@ def _equi_join_pairs(condition: str) -> "list[tuple[str, str]]":
                 else (m.group(4), m.group(3))
             out.append((tc, sc))
     return out
+
+
+def _foreach_slice(spark: SparkSession, items: list, fn) -> None:
+    """Run ``fn`` over slices of ``items`` on the executors, one slice
+    per task slot: a task costs far more than the per-file storage
+    call it runs."""
+    sc = spark.sparkContext
+    sc.parallelize(items, max(1, min(len(items), sc.defaultParallelism))) \
+        .foreachPartition(fn)
+
+
+def _without_dv(add: Add) -> Add:
+    """``add`` without its deletion vector: a scan of it sees every
+    physical row."""
+    import dataclasses
+    return dataclasses.replace(
+        add, extra={k: v for k, v in (add.extra or {}).items()
+                    if k != "deletionVector"})
 
 
 def _norm_uri(u: str) -> str:
