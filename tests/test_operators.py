@@ -7,8 +7,23 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from xdlake_spark.operators import dedup, multimodal, similarity
+from xdlake_spark.operators import dedup, multimodal, plan_max_rows, similarity
 from xdlake_spark.operators import text as textops
+
+from .utils import jobs_during
+
+
+def _tiled(df) -> bool:
+    """True when ``df``'s plan salts buckets into blocks (the hot-bucket
+    tiling); False when it runs the plain one-block join."""
+    return "__sb" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _unbounded(spark, df, path):
+    """``df`` written to parquet and read back: a file scan, whose plan
+    carries no row bound."""
+    df.write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
 
 
 @pytest.fixture(scope="module")
@@ -241,21 +256,72 @@ class TestCrossCorpusDedup:
         # identical new docs survive: only corpus matches can evict
         assert dedup.cross_corpus_dedup(new, corpus).count() == 2
 
-    def test_tiled_equals_untiled(self, spark, documents):
+    def test_tiled_equals_untiled(self, spark, documents, tmpdir):
         """A tiny bucket_cap forces multi-block tiling on every shared
         shingle; the pair set must be identical to the effectively
-        untiled run (same guarantee as the self-join bucket test)."""
+        untiled run (same guarantee as the self-join bucket test). The
+        new side is bounded at 60 rows: below the cap it is one block
+        and runs the broadcast join, above it the tiled grid. The same
+        rows as a file scan carry no bound and must tile."""
         new = documents.filter(F.col("doc_id") % 4 == 0).limit(60)
         corpus = documents.filter(F.col("doc_id") % 4 != 0).limit(120)
-        untiled = {(r["new_id"], r["corpus_id"], r["jaccard"]) for r in
-                   dedup.cross_corpus_jaccard_pairs(
-                       new, corpus, threshold=0.1,
-                       bucket_cap=10 ** 9).collect()}
-        tiled = {(r["new_id"], r["corpus_id"], r["jaccard"]) for r in
-                 dedup.cross_corpus_jaccard_pairs(
-                     new, corpus, threshold=0.1,
-                     bucket_cap=2).collect()}
-        assert tiled == untiled and len(tiled) > 0
+        assert plan_max_rows(new) == 60
+
+        def pairs(new_, cap, tiled):
+            out = dedup.cross_corpus_jaccard_pairs(
+                new_, corpus, threshold=0.1, bucket_cap=cap)
+            assert _tiled(out) == tiled
+            return {(r["new_id"], r["corpus_id"], r["jaccard"])
+                    for r in out.collect()}
+
+        untiled = pairs(new, 10 ** 9, tiled=False)
+        assert pairs(new, 2, tiled=True) == untiled and len(untiled) > 0
+        scan = _unbounded(spark, new, f"{tmpdir}/new")
+        assert plan_max_rows(scan) is None
+        assert pairs(scan, 10 ** 9, tiled=True) == untiled
+        # the admission filter takes the bound before its checkpoint
+        kept = {r["doc_id"] for r in dedup.cross_corpus_dedup(
+            new, corpus, threshold=0.1).collect()}
+        assert kept == ({r["doc_id"] for r in new.collect()}
+                        - {n for n, _, _ in untiled})
+
+    def test_admission_jobs(self, spark, tmpdir):
+        """One batch admission, ``write(cross_corpus_dedup(
+        minhash_dedup(batch), corpus))``, on a 128-row Arrow batch: the
+        batch is bounded below ``bucket_cap``, so both pair joins run
+        untiled. Pins its Spark job count (the tiled plan ran 23)."""
+        import pyarrow as pa
+
+        from xdlake_spark import DeltaTable
+
+        rng = np.random.default_rng(7)
+        words = [f"w{i}" for i in range(300)]
+
+        def texts(n):
+            return [" ".join(rng.choice(words, 30)) for _ in range(n)]
+
+        corpus = texts(400)
+        t = DeltaTable(spark, f"{tmpdir}/corpus").write(
+            spark.createDataFrame(pd.DataFrame(
+                {"doc_id": range(400), "text": corpus})))
+        fresh = texts(128)
+        batch = pa.table({
+            "doc_id": pa.array(range(1000, 1128), pa.int64()),
+            # of every 4 docs, the 1st copies a corpus doc and the 3rd
+            # the 2nd; the 2nd and 4th are fresh
+            "text": [corpus[i] if i % 4 == 0
+                     else fresh[i - 1] if i % 4 == 2 else fresh[i]
+                     for i in range(128)]})
+
+        def admit():
+            new = spark.createDataFrame(batch)
+            assert plan_max_rows(new) == 128
+            return t.write(dedup.cross_corpus_dedup(
+                dedup.minhash_dedup(new), t.to_df()))
+
+        t2, jobs = jobs_during(spark, "dedup-admit", admit)
+        assert t2.to_df().count() == 400 + 128 - 32 - 32
+        assert len(jobs) == 15, len(jobs)
 
     def test_valve_noop_below_cutoff(self, spark, documents):
         new = documents.filter(F.col("doc_id") % 4 == 0)
@@ -1144,13 +1210,20 @@ class TestBoundedBucketPairs:
         import itertools
         from collections import Counter
 
+        import pyarrow as pa
+
         rng = np.random.default_rng(seed)
         n_ids, n_buckets = 40, 6
         rows = [(int(i), int(b))
                 for i in range(n_ids) for b in range(n_buckets)
                 if rng.random() < 0.4]
-        entries = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["id", "bucket"]))
+        entries = spark.createDataFrame(pa.Table.from_pandas(
+            pd.DataFrame(rows, columns=["id", "bucket"])))
+        # a LocalRelation with one row per (id, bucket): its row count
+        # bounds every bucket, so a bound at or below the cap (cap=10**6)
+        # runs the plain self-join, and the others tile
+        bound = plan_max_rows(entries)
+        assert bound == len(rows)
 
         by_bucket: dict[int, list[int]] = {}
         for i, b in rows:
@@ -1160,35 +1233,45 @@ class TestBoundedBucketPairs:
             for x, y in itertools.combinations(sorted(members), 2):
                 want[(x, y)] += 1
 
-        got_multi = Counter(
-            (r["id_a"], r["id_b"]) for r in dedup._bounded_bucket_pairs(
-                entries, ["bucket"], bucket_cap=cap,
-                distinct=False).collect())
-        assert got_multi == want
+        for max_members in (None, bound):
+            multi = dedup._bounded_bucket_pairs(
+                entries, ["bucket"], bucket_cap=cap, distinct=False,
+                max_members=max_members)
+            assert _tiled(multi) == (max_members is None or bound > cap)
+            got_multi = Counter((r["id_a"], r["id_b"])
+                                for r in multi.collect())
+            assert got_multi == want
 
-        got_set = sorted(
-            (r["id_a"], r["id_b"]) for r in dedup._bounded_bucket_pairs(
-                entries, ["bucket"], bucket_cap=cap).collect())
-        assert got_set == sorted(set(want))
+            got_set = sorted(
+                (r["id_a"], r["id_b"]) for r in dedup._bounded_bucket_pairs(
+                    entries, ["bucket"], bucket_cap=cap,
+                    max_members=max_members).collect())
+            assert got_set == sorted(set(want))
 
     def test_minhash_capped_equals_uncapped_on_hot_bucket(
-            self, spark, documents):
+            self, spark, documents, tmpdir):
         # 120 identical docs = one hot bucket in every band; tiling must
-        # not change the result
+        # not change the result. The union is bounded at 180 rows: above
+        # cap 20 it tiles, below cap 10**9 it runs the plain self-join;
+        # the same rows as a file scan carry no bound and tile.
         base = documents.limit(60).select("doc_id", "text")
         one = documents.limit(1).select("text")
         hot = (spark.range(120)
                .select((F.col("id") + 500000).alias("doc_id"))
                .crossJoin(one))
         corpus = base.unionByName(hot)
+        assert plan_max_rows(corpus) == 180
 
-        def pairs(cap):
-            return sorted(
-                (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-                for r in dedup.minhash_lsh_pairs(
-                    corpus, threshold=0.7, bucket_cap=cap).collect())
+        def pairs(df, cap, tiled):
+            out = dedup.minhash_lsh_pairs(df, threshold=0.7, bucket_cap=cap)
+            assert _tiled(out) == tiled
+            return sorted((r["id_a"], r["id_b"], round(r["jaccard"], 9))
+                          for r in out.collect())
 
-        assert pairs(20) == pairs(10**9)
+        plain = pairs(corpus, 10**9, tiled=False)
+        assert pairs(corpus, 20, tiled=True) == plain
+        scan = _unbounded(spark, corpus, f"{tmpdir}/corpus")
+        assert pairs(scan, 10**9, tiled=True) == plain
 
     def test_ngram_jaccard_capped_equals_uncapped(self, spark, documents):
         base = documents.limit(60).select("doc_id", "text")

@@ -72,6 +72,33 @@ class TestRowTracking:
         for rid, name in zip(after["_row_id"], after["n_name"]):
             assert m[rid] == name
 
+    @pytest.mark.parametrize("label", ["a b", "50%"])
+    def test_dv_delete_url_encoded_partition(self, spark, tmpdir,
+                                             nation, label):
+        """A partition value that needs URL encoding in the file URI
+        (a space; a ``%``, which Spark also escapes in the directory
+        name): the deletion-vector mask must still find its file, so
+        masked rows are gone from the row-id scan and from ``to_df``,
+        and survivors keep their ids."""
+        df = nation.withColumn(
+            "grp", F.when(F.col("n_regionkey") < 2, F.lit(label))
+            .otherwise(F.lit("plain")))
+        t = DeltaTable(spark, f"{tmpdir}/enc").write(
+            df, partition_by=["grp"]).enable_row_tracking()
+        before = t.to_df_with_row_ids().toPandas()
+        t2 = t.delete("n_nationkey % 3 = 0", mode="merge-on-read")
+        assert any((a.extra or {}).get("deletionVector")
+                   for p, a in t2.adds.items() if "plain" not in p)
+        after = t2.to_df_with_row_ids().toPandas()
+        kept = before[before.n_nationkey % 3 != 0]
+        assert sorted(after["n_nationkey"]) == sorted(kept["n_nationkey"])
+        assert sorted(r[0] for r in t2.to_df().select("n_nationkey")
+                      .collect()) == sorted(kept["n_nationkey"])
+        assert (after.set_index("n_nationkey")["_row_id"].sort_index()
+                .tolist()
+                == kept.set_index("n_nationkey")["_row_id"].sort_index()
+                .tolist())
+
     def test_cow_rewrite_assigns_fresh_ids(self, spark, tmpdir,
                                            nation):
         t = _make(spark, tmpdir, nation).enable_row_tracking()

@@ -104,6 +104,23 @@ def plan_row_estimate(df: DataFrame) -> "int | None":
     return None
 
 
+def plan_max_rows(df: DataFrame) -> "int | None":
+    """Catalyst's hard upper bound on the rows of ``df`` (the optimized
+    plan's ``maxRows``) — metadata only, NEVER runs a job and is never
+    an estimate. Defined for a ``LocalRelation``, a ``limit``, and the
+    operators that cannot add rows to a bounded child (filter, project,
+    left semi/anti join, ...). A ``localCheckpoint`` (``LogicalRDD``)
+    has no bound, so callers take it before they checkpoint. Returns
+    None when the plan carries no bound."""
+    try:
+        mr = df._jdf.queryExecution().optimizedPlan().maxRows()
+        if mr.isDefined():
+            return _as_int(mr.get())
+    except Exception:
+        pass
+    return None
+
+
 def arrow_gate(df: DataFrame, threshold: int = 2000) -> bool:
     """True when ``df`` is (estimated) large enough that the Arrow
     physical plan beats the JVM-HOF one. Plan-statistics first (no

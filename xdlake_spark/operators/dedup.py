@@ -32,7 +32,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import arrow_gate, ensure_parallelism, plan_row_estimate
+from . import (arrow_gate, ensure_parallelism, plan_max_rows,
+               plan_row_estimate)
 from ..functions.text import fingerprint_md5, shingles
 from ..functions.vectors import cosine, hyperplane_signature, lit_longs
 
@@ -40,7 +41,8 @@ from ..functions.vectors import cosine, hyperplane_signature, lit_longs
 def _bounded_bucket_pairs(entries: DataFrame, keys: list[str],
                           payload: list[str] | None = None,
                           bucket_cap: int = 2000,
-                          distinct: bool = True) -> DataFrame:
+                          distinct: bool = True,
+                          max_members: int | None = None) -> DataFrame:
     """All unordered same-bucket id pairs, with per-task pair work
     bounded by ~``bucket_cap``^2 regardless of bucket size.
 
@@ -59,33 +61,51 @@ def _bounded_bucket_pairs(entries: DataFrame, keys: list[str],
     bucket_cap rows — identical output (every cross-salt pair lands in
     exactly one block; diagonal blocks order by id), total work
     unchanged, stragglers gone. Shuffle volume is n*(s+1) rows per
-    bucket — the replication cost of tiling, negligible for the
-    all-small common case (s=1: one extra count-attach join only).
+    bucket — the replication cost of tiling.
+
+    ``max_members``: a hard upper bound on any bucket's member count
+    that the caller knows without a job — its input's ``maxRows``
+    (:func:`plan_max_rows`) when each input row yields at most one
+    entry per bucket. At ``max_members <= bucket_cap`` every bucket is
+    one block (s = 1), so the grid IS the plain self-join on the keys
+    with ``l.id < r.id``; it runs without the bucket-count aggregation,
+    the count join and the salt explodes. None (no bound) tiles.
 
     Returns (id_a, id_b[, {p}_a, {p}_b ...]) with id_a < id_b, deduped
     across buckets.
     """
     payload = payload or []
-    # entries feeds three consumers (bucket counts + both join sides);
-    # callers checkpoint the expensive upstream (signatures/shingles)
-    # themselves, so no extra materialization here
-    cnt = entries.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
-    e = (entries.join(cnt, keys)
-         .withColumn("__ns", F.ceil(F.col("__n") / F.lit(bucket_cap))
-                     .cast("int"))
-         .withColumn("__salt",
-                     F.pmod(F.xxhash64("id"), F.col("__ns")).cast("int"))
-         .drop("__n"))
-    # left side owns block rows (salt, sb) for sb >= salt; right side
-    # (sa, salt) for sa <= salt: a pair with salts (x <= y) meets in
-    # exactly one block (x, y)
-    left = e.select(
-        *keys, "id", *payload, F.col("__salt").alias("__sa"),
-        F.explode(F.sequence(F.col("__salt"), F.col("__ns") - 1))
-        .alias("__sb"))
-    right = e.select(
-        *keys, "id", *payload, F.col("__salt").alias("__sb"),
-        F.explode(F.sequence(F.lit(0), F.col("__salt"))).alias("__sa"))
+    if max_members is not None and max_members <= bucket_cap:
+        left = right = entries.select(*keys, "id", *payload)
+        blocks, ids = [], F.col("l.id") < F.col("r.id")
+    else:
+        # entries feeds three consumers (bucket counts + both join
+        # sides); callers checkpoint the expensive upstream
+        # (signatures/shingles) themselves, so no extra materialization
+        cnt = entries.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
+        e = (entries.join(cnt, keys)
+             .withColumn("__ns", F.ceil(F.col("__n") / F.lit(bucket_cap))
+                         .cast("int"))
+             .withColumn("__salt",
+                         F.pmod(F.xxhash64("id"), F.col("__ns")).cast("int"))
+             .drop("__n"))
+        # left side owns block rows (salt, sb) for sb >= salt; right side
+        # (sa, salt) for sa <= salt: a pair with salts (x <= y) meets in
+        # exactly one block (x, y)
+        left = e.select(
+            *keys, "id", *payload, F.col("__salt").alias("__sa"),
+            F.explode(F.sequence(F.col("__salt"), F.col("__ns") - 1))
+            .alias("__sb"))
+        right = e.select(
+            *keys, "id", *payload, F.col("__salt").alias("__sb"),
+            F.explode(F.sequence(F.lit(0), F.col("__salt"))).alias("__sa"))
+        blocks = ["__sa", "__sb"]
+        # diagonal blocks see both orientations -> order there;
+        # off-diagonal blocks see each pair once in a fixed
+        # (salt-determined) orientation -> must not drop on id order
+        ids = F.when(F.col("l.__sa") == F.col("l.__sb"),
+                     F.col("l.id") < F.col("r.id")) \
+            .otherwise(F.col("l.id") != F.col("r.id"))
 
     # NOTE (r12): deliberately NOT repartition-pinned. At sf0.1 AQE
     # byte-coalesces this join's quadratic pair emit onto one ~1 s
@@ -94,14 +114,7 @@ def _bounded_bucket_pairs(entries: DataFrame, keys: list[str],
     # coalesced emit), and at real scale the shuffle is large enough
     # that AQE keeps the parallelism.
     l, r = left.alias("l"), right.alias("r")
-    same = [F.col(f"l.{k}") == F.col(f"r.{k}")
-            for k in [*keys, "__sa", "__sb"]]
-    # diagonal blocks see both orientations -> order there; off-diagonal
-    # blocks see each pair once in a fixed (salt-determined) orientation
-    # -> must not drop on id order
-    ids = F.when(F.col("l.__sa") == F.col("l.__sb"),
-                 F.col("l.id") < F.col("r.id")) \
-        .otherwise(F.col("l.id") != F.col("r.id"))
+    same = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in [*keys, *blocks]]
     cond = functools.reduce(operator.and_, same) & ids
 
     lo = F.col("l.id") < F.col("r.id")
@@ -114,6 +127,7 @@ def _bounded_bucket_pairs(entries: DataFrame, keys: list[str],
                     .otherwise(F.col(f"l.{p}")).alias(f"{p}_b"))
     out = l.join(r, cond).select(cols)
     return out.dropDuplicates(["id_a", "id_b"]) if distinct else out
+
 
 def _bounded_bipartite_pairs(a: DataFrame, b: DataFrame,
                              keys: list[str],
@@ -134,6 +148,12 @@ def _bounded_bipartite_pairs(a: DataFrame, b: DataFrame,
     members) spreads its s_a*s_b pair emissions over block tasks of
     ~cap^2 each. Emits one row per (bucket, pair); callers aggregate
     co-occurrence counts.
+
+    When one side is bounded at <= ``bucket_cap`` rows with one row per
+    (id, bucket), every bucket has s_a = 1 and the grid is one block
+    row: the result is the plain join on the keys, which
+    :func:`cross_corpus_jaccard_pairs` runs as a broadcast join instead
+    of calling this tiling.
     """
     one, zero = F.lit(1), F.lit(0)
     cnt = (a.select(*keys, one.alias("__na"), zero.alias("__nb"))
@@ -1023,9 +1043,15 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     hash key — so candidates are generated per-bucket, never O(n^2);
     ``bucket_cap`` tiles any hot bucket (k near-identical docs — the
     common case on web corpora) into bounded block tasks instead of
-    one O(k^2) straggler (see ``_bounded_bucket_pairs``).
+    one O(k^2) straggler (see ``_bounded_bucket_pairs``). An input
+    bounded at <= ``bucket_cap`` rows (``plan_max_rows``: a local
+    batch, a limit, or a filter/anti-join of one) cannot fill a bucket
+    past one block, so its pairs come from the plain self-join.
     """
     rows_per_band = num_hashes // bands
+    # one band entry per input row and band: no bucket outgrows the input
+    # (taken before the checkpoint, which drops the plan's bound)
+    max_members = plan_max_rows(df)
     # the shingle/signature projection is the expensive stage: checkpoint
     # it ONCE so the band-bucket self-join and the verify join both read
     # the materialized result instead of recomputing the text pipeline;
@@ -1048,7 +1074,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     ).select("id", "bb.band", "bb.bucket")
 
     cand = _bounded_bucket_pairs(band_entries, ["band", "bucket"],
-                                 bucket_cap=bucket_cap)
+                                 bucket_cap=bucket_cap,
+                                 max_members=max_members)
 
     # verify candidates only: attach shingle sets by id
     cand = (cand
@@ -1099,11 +1126,15 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     practice for web-scale similarity joins). None = textbook-exact.
 
     Independently of that semantic knob, the inverted-index self-join is
-    always tiled per shingle by ``bucket_cap`` (_bounded_bucket_pairs,
+    tiled per shingle by ``bucket_cap`` (_bounded_bucket_pairs,
     count-preserving mode): even with ``max_doc_freq=None`` a shingle
     shared by k docs does its k^2/2 pair emissions across bounded block
-    tasks instead of one straggler — result identical.
+    tasks instead of one straggler — result identical. A bounded input
+    (``plan_max_rows`` <= ``bucket_cap``) is one block per shingle and
+    runs the plain self-join.
     """
+    # shingles are distinct per document: no shingle outgrows the input
+    max_members = plan_max_rows(df)
     sh = (ensure_parallelism(df)
           .select(F.col(id_col).alias("id"),
                   shingles(F.col(text_col), k_shingle).alias("sh"))
@@ -1119,7 +1150,8 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
         sizes = sh.select("id", F.size("sh").alias("n_sh"))
 
     inter = (_bounded_bucket_pairs(inv, ["shingle"],
-                                   bucket_cap=bucket_cap, distinct=False)
+                                   bucket_cap=bucket_cap, distinct=False,
+                                   max_members=max_members)
              .groupBy("id_a", "id_b")
              .agg(F.count(F.lit(1)).alias("n_inter")))
 
@@ -1154,6 +1186,7 @@ def ngram_containment_pairs(df: DataFrame, text_col: str = "text",
     ``(id_a, id_b, containment_a, containment_b)`` for pairs where
     EITHER direction reaches ``threshold`` (containment_a = share of
     A's shingles found in B)."""
+    max_members = plan_max_rows(df)  # as in ngram_jaccard_pairs
     sh = (ensure_parallelism(df)
           .select(F.col(id_col).alias("id"),
                   shingles(F.col(text_col), k_shingle).alias("sh"))
@@ -1167,7 +1200,8 @@ def ngram_containment_pairs(df: DataFrame, text_col: str = "text",
         sizes = sh.select("id", F.size("sh").alias("n_sh"))
     inter = (_bounded_bucket_pairs(inv, ["shingle"],
                                    bucket_cap=bucket_cap,
-                                   distinct=False)
+                                   distinct=False,
+                                   max_members=max_members)
              .groupBy("id_a", "id_b")
              .agg(F.count(F.lit(1)).alias("n_inter")))
     sa = sizes.select(F.col("id").alias("id_a"),
@@ -1207,46 +1241,87 @@ def cross_corpus_jaccard_pairs(new: DataFrame, corpus: DataFrame,
     from both indexes AND both size denominators, keeping jaccard a
     true ratio over the surviving sets.
 
-    Independently of that semantic knob, the shingle join is always
-    tiled by ``bucket_cap`` (:func:`_bounded_bipartite_pairs`): a
-    shingle in ``s_new`` batch docs and ``s_cor`` corpus docs fans out
+    Independently of that semantic knob, the shingle join is tiled by
+    ``bucket_cap`` (:func:`_bounded_bipartite_pairs`): a shingle in
+    ``s_new`` batch docs and ``s_cor`` corpus docs fans out
     ``s_new * s_cor`` pairs, and the grid tiling spreads them over
     ~cap^2 block tasks instead of one straggler — result identical.
 
+    When ``max_doc_freq`` is None and ``new`` is bounded at <=
+    ``bucket_cap`` rows (:func:`plan_max_rows`: a local batch, a limit,
+    or a filter/anti-join of one), every shingle has one new-side block
+    and the grid is the plain join. The new side's inverted index is
+    then broadcast (<= ``bucket_cap`` documents' shingle rows, about
+    20 B each) and the corpus side streams past it once; each task
+    emits at most its corpus rows x ``bucket_cap`` pairs, the tiled
+    block bound. Index rows carry their document's distinct-shingle
+    count, so neither side is shingled twice. Ids key the documents:
+    the result is identical to the tiled plan's when each id names one
+    document per side.
+
     Returns (new_id, corpus_id, jaccard).
     """
-    def prep(df_, tag):
-        return (ensure_parallelism(df_)
-                .select(F.col(id_col).alias(f"{tag}_id"),
-                        shingles(F.col(text_col), k_shingle).alias("sh"))
-                .localCheckpoint(eager=False))
+    return _cross_corpus_pairs(new, corpus, plan_max_rows(new), text_col,
+                               id_col, k_shingle, threshold, max_doc_freq,
+                               bucket_cap)
 
-    shn, shc = prep(new, "new"), prep(corpus, "corpus")
-    ninv = (shn.select("new_id", F.explode("sh").alias("__s"))
-            .select("new_id", F.xxhash64("__s").alias("shingle")))
-    cinv = (shc.select("corpus_id", F.explode("sh").alias("__s"))
-            .select("corpus_id", F.xxhash64("__s").alias("shingle")))
-    if max_doc_freq is not None:
-        ninv, cinv = _doc_freq_valve([ninv, cinv], "shingle",
-                                     max_doc_freq)
-        n_sizes = ninv.groupBy("new_id").agg(
-            F.count(F.lit(1)).alias("n_a"))
-        c_sizes = cinv.groupBy("corpus_id").agg(
-            F.count(F.lit(1)).alias("n_b"))
+
+def _cross_corpus_pairs(new: DataFrame, corpus: DataFrame,
+                        new_rows: int | None, text_col: str, id_col: str,
+                        k_shingle: int, threshold: float,
+                        max_doc_freq: int | None,
+                        bucket_cap: int) -> DataFrame:
+    """:func:`cross_corpus_jaccard_pairs` given the new side's row bound
+    ``new_rows`` (:func:`plan_max_rows`), so that a caller which
+    checkpoints ``new`` first can take the bound before it is lost."""
+    def shingled(df_, tag):
+        return df_.select(F.col(id_col).alias(f"{tag}_id"),
+                          shingles(F.col(text_col), k_shingle).alias("sh"))
+
+    def index(sh, tag, cols=()):
+        return (sh.select(f"{tag}_id", *cols, F.explode("sh").alias("__s"))
+                .select(f"{tag}_id", *cols,
+                        F.xxhash64("__s").alias("shingle")))
+
+    if (max_doc_freq is None and new_rows is not None
+            and new_rows <= bucket_cap):
+        def sized(df_, tag, size):
+            return index(shingled(df_, tag).withColumn(size, F.size("sh")),
+                         tag, [size])
+
+        inter = (sized(ensure_parallelism(corpus), "corpus", "n_b")
+                 .join(F.broadcast(sized(new, "new", "n_a")), "shingle")
+                 .groupBy("new_id", "corpus_id", "n_a", "n_b")
+                 .agg(F.count(F.lit(1)).alias("n_inter")))
     else:
-        ninv = ninv.localCheckpoint(eager=False)
-        cinv = cinv.localCheckpoint(eager=False)
-        n_sizes = shn.select("new_id", F.size("sh").alias("n_a"))
-        c_sizes = shc.select("corpus_id", F.size("sh").alias("n_b"))
+        shn = shingled(ensure_parallelism(new), "new") \
+            .localCheckpoint(eager=False)
+        shc = shingled(ensure_parallelism(corpus), "corpus") \
+            .localCheckpoint(eager=False)
+        ninv, cinv = index(shn, "new"), index(shc, "corpus")
+        if max_doc_freq is not None:
+            ninv, cinv = _doc_freq_valve([ninv, cinv], "shingle",
+                                         max_doc_freq)
+            n_sizes = ninv.groupBy("new_id").agg(
+                F.count(F.lit(1)).alias("n_a"))
+            c_sizes = cinv.groupBy("corpus_id").agg(
+                F.count(F.lit(1)).alias("n_b"))
+        else:
+            ninv = ninv.localCheckpoint(eager=False)
+            cinv = cinv.localCheckpoint(eager=False)
+            n_sizes = shn.select("new_id", F.size("sh").alias("n_a"))
+            c_sizes = shc.select("corpus_id", F.size("sh").alias("n_b"))
 
-    inter = (_bounded_bipartite_pairs(
-                 ninv.select(F.col("new_id").alias("a_id"), "shingle"),
-                 cinv.select(F.col("corpus_id").alias("b_id"), "shingle"),
-                 ["shingle"], bucket_cap=bucket_cap)
-             .groupBy(F.col("a_id").alias("new_id"),
-                      F.col("b_id").alias("corpus_id"))
-             .agg(F.count(F.lit(1)).alias("n_inter")))
-    return (inter.join(n_sizes, "new_id").join(c_sizes, "corpus_id")
+        inter = (_bounded_bipartite_pairs(
+                     ninv.select(F.col("new_id").alias("a_id"), "shingle"),
+                     cinv.select(F.col("corpus_id").alias("b_id"),
+                                 "shingle"),
+                     ["shingle"], bucket_cap=bucket_cap)
+                 .groupBy(F.col("a_id").alias("new_id"),
+                          F.col("b_id").alias("corpus_id"))
+                 .agg(F.count(F.lit(1)).alias("n_inter"))
+                 .join(n_sizes, "new_id").join(c_sizes, "corpus_id"))
+    return (inter
             .withColumn("jaccard",
                         F.col("n_inter").cast("double")
                         / (F.col("n_a") + F.col("n_b")
@@ -1269,11 +1344,16 @@ def cross_corpus_dedup(new: DataFrame, corpus: DataFrame,
     it is checkpointed once up front: when it is itself a dedup result
     (``minhash_dedup`` of the batch), its pair plan runs once, not
     twice. The checkpoint is lazy: its shuffle stages run here, and the
-    final stage is kept by the first of the two reads."""
+    final stage is kept by the first of the two reads. The checkpoint
+    drops the plan's row bound, so the bound is taken before it: a
+    batch of <= ``bucket_cap`` rows (with ``max_doc_freq`` None) is
+    matched by broadcasting its shingle index instead of tiling the
+    shingle grid (see :func:`cross_corpus_jaccard_pairs`)."""
+    new_rows = plan_max_rows(new)
     new = new.localCheckpoint(eager=False)
-    dup_ids = (cross_corpus_jaccard_pairs(
-                   new, corpus, text_col, id_col, k_shingle, threshold,
-                   max_doc_freq, bucket_cap)
+    dup_ids = (_cross_corpus_pairs(
+                   new, corpus, new_rows, text_col, id_col, k_shingle,
+                   threshold, max_doc_freq, bucket_cap)
                .select(F.col("new_id").alias(id_col)).distinct())
     return new.join(dup_ids, id_col, "left_anti")
 
@@ -1333,11 +1413,11 @@ def simhash_df(df: DataFrame, text_col: str = "text",
         if n_rows is not None:
             # bound Python worker spawns to the work available: each
             # worker costs ~0.5 s to start, and a few thousand docs per
-            # worker amortizes that without starving parallelism
+            # worker amortizes that without starving parallelism.
+            # coalesce never raises the partition count, so no
+            # ``rdd.getNumPartitions()`` probe (a physical-plan compile)
             par = df.sparkSession.sparkContext.defaultParallelism
-            want = max(2, min(par, n_rows // 1500))
-            if want < src.rdd.getNumPartitions():
-                src = src.coalesce(want)
+            src = src.coalesce(max(2, min(par, n_rows // 1500)))
         return src.select(
             F.col(id_col).alias("id"), _simhash(hashes).alias("simhash"))
 
@@ -1386,8 +1466,11 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
     hamming 3 of each other must agree on at least one 16-bit band);
     verification uses built-in bit_count(xor) — all JVM-side. A hot
     band bucket (identical fingerprints, e.g. boilerplate) is tiled by
-    ``bucket_cap`` (see ``_bounded_bucket_pairs``).
+    ``bucket_cap`` (see ``_bounded_bucket_pairs``); a bounded input
+    (``plan_max_rows`` <= ``bucket_cap``) runs the plain self-join.
     """
+    # one entry per input row and band; the checkpoint drops the bound
+    max_members = plan_max_rows(df)
     # two narrow columns; checkpoint so the pandas-UDF hashing stage runs
     # once, not on both sides of the self-join
     sh = simhash_df(df, text_col, id_col,
@@ -1403,7 +1486,8 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
     ).select("id", "simhash", "bb.band", "bb.bucket")
     cand = (_bounded_bucket_pairs(bands, ["band", "bucket"],
                                   payload=["simhash"],
-                                  bucket_cap=bucket_cap)
+                                  bucket_cap=bucket_cap,
+                                  max_members=max_members)
             .withColumnRenamed("simhash_a", "sh_a")
             .withColumnRenamed("simhash_b", "sh_b"))
     ham = F.expr("bit_count(sh_a ^ sh_b)")

@@ -166,13 +166,17 @@ def phash_neardup_pairs(hashes: DataFrame, max_hamming: int = 6,
     if not 0 <= max_hamming <= 15:
         raise ValueError("max_hamming must be in [0, 15] for 4-band "
                          "16-bit pigeonhole recall")
+    from . import plan_max_rows
     from .dedup import _bounded_bucket_pairs
 
     # the decode behind ``hashes`` is the expensive stage and the
     # banded join fans it out to several consumers (bucket counts +
     # both join sides): checkpoint the 4-column hash table ONCE so the
     # pixels are decoded exactly once; at cluster scale this would be
-    # persist(MEMORY_AND_DISK) or an intermediate table
+    # persist(MEMORY_AND_DISK) or an intermediate table. One entry per
+    # hash and band, so no bucket outgrows the input: its bound, taken
+    # before the checkpoint drops it, lets a small batch skip the tiling
+    max_members = plan_max_rows(hashes)
     hashes = hashes.select(id_col, hash_col).localCheckpoint(eager=True)
 
     entries = hashes.select(
@@ -185,7 +189,7 @@ def phash_neardup_pairs(hashes: DataFrame, max_hamming: int = 6,
         .select("id", "h", F.col("bv.band").alias("band"),
                 F.col("bv.val").alias("val"))
     pairs = _bounded_bucket_pairs(entries, ["band", "val"],
-                                  payload=["h"])
+                                  payload=["h"], max_members=max_members)
     return (pairs.select(F.col("id_a"), F.col("id_b"),
                          F.bit_count(F.col("h_a").bitwiseXOR(
                              F.col("h_b"))).alias("hamming"))

@@ -1515,8 +1515,9 @@ class DeltaTable:
         One scan over all live files + a broadcast manifest join keyed
         on the file path (the same shape as the general partition-
         attach path — manifest-sized driver state, never row-sized).
-        Deletion vectors compose: masked rows are anti-joined out
-        AFTER position tagging, so surviving rows keep their original
+        Deletion vectors compose through the scan's own mask
+        (:meth:`_apply_deletion_vectors`), which keys on the physical
+        ``_metadata.row_index``, so surviving rows keep their original
         physical index and therefore their original row id."""
         if self.schema is None:
             raise ValueError(f"No delta table at {self.location.url}")
@@ -1563,29 +1564,14 @@ class DeltaTable:
             + [T.StructField(f"__pv_{c}", T.StringType())
                for c in pcols])
         manifest = self.spark.createDataFrame(mrows, mschema)
-        scan = (self._read_files(files, data_schema)
-                .withColumn("__xdl_pos", F.col("_metadata.row_index")))
+        scan = self._apply_deletion_vectors(
+            self._read_files(files, data_schema), self._deleted_rows(adds))
         raw = F.regexp_replace(F.input_file_name(),
                                "^[a-zA-Z0-9+.-]+://?", "/")
         raw = F.regexp_replace(raw, "^//+", "/")
-        scan = scan.withColumn(
-            "__xdl_path", F.coalesce(F.try_url_decode(raw), raw))
-        dv_adds = {p: a for p, a in adds.items()
-                   if (a.extra or {}).get("deletionVector")}
-        if dv_adds:
-            from .log.dv import deleted_row_indexes
-            rows = []
-            for p, a in dv_adds.items():
-                desc = (a.extra or {})["deletionVector"]
-                url = _strip_scheme(self.location.absloc(p).url)
-                rows.extend((url, int(i)) for i in
-                            deleted_row_indexes(self.location, desc))
-            if rows:
-                dead = self._dv_positions_frame(rows)
-                scan = (scan.join(
-                    dead, (F.col("__xdl_path") == F.col("__dv_file"))
-                    & (F.col("__xdl_pos") == F.col("__dv_pos")),
-                    "left_anti"))
+        scan = scan.withColumns({
+            "__xdl_pos": F.col("_metadata.row_index"),
+            "__xdl_path": F.coalesce(F.try_url_decode(raw), raw)})
         out = scan.join(F.broadcast(manifest), "__xdl_path")
         for c in pcols:
             out = out.withColumn(
@@ -3864,10 +3850,13 @@ class DeltaTable:
         the scan keyed on ``_metadata.file_path`` +
         ``_metadata.row_index``. Broadcast when small; past ~2M
         positions it degrades to a shuffle join, still correct. Paths
-        are normalized identically on both sides (scheme stripped,
-        url-decoded — the `_rel_by_uri` convention).
+        meet in the manifest-join convention of :meth:`_scan`: the
+        log's (literal) path scheme-stripped, Spark's file URI
+        scheme-stripped and url-decoded once. Decoding the literal path
+        too would turn a partition directory Spark escaped
+        (``p=50%25``) into a path that does not exist (``p=50%``).
         """
-        rows = [(_norm_uri(self.location.absloc(p).url), int(i))
+        rows = [(_strip_scheme(self.location.absloc(p).url), int(i))
                 for p, idx in deleted.items() for i in idx]
         if not rows:
             return df
@@ -5911,8 +5900,7 @@ def _without_dv(add: Add) -> Add:
 def _norm_uri(u: str) -> str:
     """Scheme stripped, leading slashes collapsed, url-decoded — the
     canonical form for matching Spark-reported file URIs against
-    manifest paths (mirrored in Spark SQL by
-    ``_apply_deletion_vectors``)."""
+    manifest paths."""
     u = re.sub(r"^[a-zA-Z0-9+.-]+://?", "/", u)
     u = re.sub(r"^//+", "/", u)
     try:
