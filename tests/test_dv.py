@@ -288,6 +288,31 @@ class TestDvBroadcastGate:
         left = t.to_df().select("idx").toPandas()["idx"]
         assert sorted(left) == list(range(10, 30))
 
+    def test_row_id_read_correct_past_gate(
+            self, spark, tmp_table_dir, monkeypatch):
+        """Past the gate the row-id read's anti-join shuffles the scan;
+        its file tag must be taken before that exchange, or every row
+        misses the manifest join and the read comes back empty."""
+        monkeypatch.setattr(DeltaTable, "_DV_BROADCAST_MAX", 0)
+        pdf = gen_pdf(40)
+        pdf["idx"] = range(40)
+        t = DeltaTable(spark, tmp_table_dir)
+        t = t.write(spark.createDataFrame(pdf).coalesce(1)) \
+            .enable_row_tracking()
+        t = t.delete("idx % 4 = 0", mode="merge-on-read")
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            df = t.to_df_with_row_ids()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            got = df.select("idx", "_row_id").toPandas()
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        assert "SortMergeJoin" in plan
+        kept = [i for i in range(40) if i % 4]
+        assert sorted(got["idx"]) == kept
+        assert sorted(got["_row_id"]) == kept
+
 
 class TestDvOtherReadPaths:
     """Every read surface must honor (or loudly refuse) deletion

@@ -285,11 +285,32 @@ class TestCrossCorpusDedup:
         assert kept == ({r["doc_id"] for r in new.collect()}
                         - {n for n, _, _ in untiled})
 
+    def test_long_documents_do_not_broadcast(self, spark):
+        """Three documents are far below ``bucket_cap`` rows, but at
+        110k tokens each their shingle index (~330k rows) is past the
+        default 10 MB broadcast threshold: the join must tile rather
+        than broadcast it, with the same pairs."""
+        import pyarrow as pa
+
+        rng = np.random.default_rng(11)
+        vocab = np.array([f"v{i}" for i in range(5000)])
+        long_docs = [" ".join(rng.choice(vocab, 110_000)) for _ in range(3)]
+        new = spark.createDataFrame(pa.table(
+            {"doc_id": pa.array([0, 1, 2], pa.int64()), "text": long_docs}))
+        corpus = spark.createDataFrame(pd.DataFrame(
+            {"doc_id": [7, 8], "text": [long_docs[0], "a b c d"]}))
+        assert plan_max_rows(new) == 3
+        out = dedup.cross_corpus_jaccard_pairs(new, corpus)
+        assert _tiled(out)
+        assert [(r["new_id"], r["corpus_id"], r["jaccard"])
+                for r in out.collect()] == [(0, 7, 1.0)]
+
     def test_admission_jobs(self, spark, tmpdir):
         """One batch admission, ``write(cross_corpus_dedup(
         minhash_dedup(batch), corpus))``, on a 128-row Arrow batch: the
         batch is bounded below ``bucket_cap``, so both pair joins run
-        untiled. Pins its Spark job count (the tiled plan ran 23)."""
+        untiled; one of its jobs sizes the batch's shingle index for the
+        broadcast. Pins its Spark job count (the tiled plan ran 23)."""
         import pyarrow as pa
 
         from xdlake_spark import DeltaTable
@@ -321,7 +342,7 @@ class TestCrossCorpusDedup:
 
         t2, jobs = jobs_during(spark, "dedup-admit", admit)
         assert t2.to_df().count() == 400 + 128 - 32 - 32
-        assert len(jobs) == 15, len(jobs)
+        assert len(jobs) == 16, len(jobs)
 
     def test_valve_noop_below_cutoff(self, spark, documents):
         new = documents.filter(F.col("doc_id") % 4 == 0)

@@ -32,8 +32,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import (arrow_gate, ensure_parallelism, plan_max_rows,
-               plan_row_estimate)
+from . import (_parse_bytes, arrow_gate, ensure_parallelism,
+               plan_max_rows, plan_row_estimate)
 from ..functions.text import fingerprint_md5, shingles
 from ..functions.vectors import cosine, hyperplane_signature, lit_longs
 
@@ -153,7 +153,8 @@ def _bounded_bipartite_pairs(a: DataFrame, b: DataFrame,
     (id, bucket), every bucket has s_a = 1 and the grid is one block
     row: the result is the plain join on the keys, which
     :func:`cross_corpus_jaccard_pairs` runs as a broadcast join instead
-    of calling this tiling.
+    of calling this tiling when that side's index also fits Spark's
+    broadcast threshold.
     """
     one, zero = F.lit(1), F.lit(0)
     cnt = (a.select(*keys, one.alias("__na"), zero.alias("__nb"))
@@ -1250,20 +1251,48 @@ def cross_corpus_jaccard_pairs(new: DataFrame, corpus: DataFrame,
     When ``max_doc_freq`` is None and ``new`` is bounded at <=
     ``bucket_cap`` rows (:func:`plan_max_rows`: a local batch, a limit,
     or a filter/anti-join of one), every shingle has one new-side block
-    and the grid is the plain join. The new side's inverted index is
-    then broadcast (<= ``bucket_cap`` documents' shingle rows, about
-    20 B each) and the corpus side streams past it once; each task
-    emits at most its corpus rows x ``bucket_cap`` pairs, the tiled
-    block bound. Index rows carry their document's distinct-shingle
-    count, so neither side is shingled twice. Ids key the documents:
-    the result is identical to the tiled plan's when each id names one
-    document per side.
+    and the grid is the plain join. The new side's inverted index
+    (<= ``bucket_cap`` documents' shingle rows, 32 B each) is then
+    broadcast if one small job finds that the batch's token count, a
+    hard bound on those rows, fits ``spark.sql.autoBroadcastJoinThreshold``
+    (:func:`_index_fits_broadcast`); a batch of long documents tiles
+    instead. The corpus side streams past the broadcast once; each
+    task emits at most its corpus rows x ``bucket_cap`` pairs, the
+    tiled block bound. Index rows carry their document's
+    distinct-shingle count, so neither side is shingled twice. Ids key
+    the documents: the result is identical to the tiled plan's when
+    each id names one document per side.
 
     Returns (new_id, corpus_id, jaccard).
     """
     return _cross_corpus_pairs(new, corpus, plan_max_rows(new), text_col,
                                id_col, k_shingle, threshold, max_doc_freq,
                                bucket_cap)
+
+
+#: Bytes of one broadcast index row (new_id, n_a, shingle) as an
+#: UnsafeRow: the null bitset word plus three 8-byte slots.
+_INDEX_ROW_BYTES = 32
+
+
+def _index_fits_broadcast(new: DataFrame, text_col: str) -> bool:
+    """Whether the new side's shingle index fits Spark's broadcast
+    threshold (``spark.sql.autoBroadcastJoinThreshold``; -1 never
+    fits). A row bound is no size bound: one long document has any
+    number of shingles. A document has at most max(1, tokens) distinct
+    shingles, so the batch's token count bounds the index rows. One
+    job with no shuffle collects each document's count (``new`` is
+    bounded, so at most ``bucket_cap`` integers). In
+    :func:`cross_corpus_dedup` that job is the first read of the
+    checkpointed batch, so it runs the batch's plan once, as the join
+    would have."""
+    budget = _parse_bytes(new.sparkSession.conf.get(
+        "spark.sql.autoBroadcastJoinThreshold", "10MB"))
+    if budget < 0:
+        return False
+    toks = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
+    n = sum(r[0] for r in new.select(F.greatest(toks, F.lit(1))).collect())
+    return n * _INDEX_ROW_BYTES <= budget
 
 
 def _cross_corpus_pairs(new: DataFrame, corpus: DataFrame,
@@ -1284,7 +1313,8 @@ def _cross_corpus_pairs(new: DataFrame, corpus: DataFrame,
                         F.xxhash64("__s").alias("shingle")))
 
     if (max_doc_freq is None and new_rows is not None
-            and new_rows <= bucket_cap):
+            and new_rows <= bucket_cap
+            and _index_fits_broadcast(new, text_col)):
         def sized(df_, tag, size):
             return index(shingled(df_, tag).withColumn(size, F.size("sh")),
                          tag, [size])
@@ -1346,9 +1376,10 @@ def cross_corpus_dedup(new: DataFrame, corpus: DataFrame,
     twice. The checkpoint is lazy: its shuffle stages run here, and the
     final stage is kept by the first of the two reads. The checkpoint
     drops the plan's row bound, so the bound is taken before it: a
-    batch of <= ``bucket_cap`` rows (with ``max_doc_freq`` None) is
-    matched by broadcasting its shingle index instead of tiling the
-    shingle grid (see :func:`cross_corpus_jaccard_pairs`)."""
+    batch of <= ``bucket_cap`` rows (with ``max_doc_freq`` None) whose
+    shingle index fits Spark's broadcast threshold is matched by
+    broadcasting that index instead of tiling the shingle grid (see
+    :func:`cross_corpus_jaccard_pairs`)."""
     new_rows = plan_max_rows(new)
     new = new.localCheckpoint(eager=False)
     dup_ids = (_cross_corpus_pairs(

@@ -1564,14 +1564,17 @@ class DeltaTable:
             + [T.StructField(f"__pv_{c}", T.StringType())
                for c in pcols])
         manifest = self.spark.createDataFrame(mrows, mschema)
-        scan = self._apply_deletion_vectors(
-            self._read_files(files, data_schema), self._deleted_rows(adds))
         raw = F.regexp_replace(F.input_file_name(),
                                "^[a-zA-Z0-9+.-]+://?", "/")
         raw = F.regexp_replace(raw, "^//+", "/")
-        scan = scan.withColumns({
-            "__xdl_pos": F.col("_metadata.row_index"),
-            "__xdl_path": F.coalesce(F.try_url_decode(raw), raw)})
+        # tag file and position on the raw scan, before the DV mask:
+        # past _DV_BROADCAST_MAX the anti-join shuffles the scan, and
+        # input_file_name() above that exchange reads ''
+        scan = self._apply_deletion_vectors(
+            self._read_files(files, data_schema).withColumns({
+                "__xdl_pos": F.col("_metadata.row_index"),
+                "__xdl_path": F.coalesce(F.try_url_decode(raw), raw)}),
+            self._deleted_rows(adds))
         out = scan.join(F.broadcast(manifest), "__xdl_path")
         for c in pcols:
             out = out.withColumn(
